@@ -1559,21 +1559,6 @@ def _dsir_grams(text_col: str) -> Column:
     )[0]
 
 
-def _check_features_frame(features: DataFrame, caller: str) -> DataFrame:
-    """Loud-failure guard for the shared ``features=`` hook (ADVICE
-    r14): the frame is joined blindly on ``_id``/``_b``, so a frame
-    with the wrong shape (or a raw docs frame passed by mistake) would
-    silently produce a diverged fit/score. Validates the column
-    contract only — the bucket count and source df cannot be checked
-    cheaply and remain documented caller obligations."""
-    if set(features.columns) != {"_id", "_b", "_c"}:
-        raise ValueError(
-            f"{caller}: features= must be a _doc_bucket_counts frame "
-            f"with columns {{_id, _b, _c}}, got {features.columns}"
-        )
-    return features
-
-
 def _doc_bucket_counts(
     df: DataFrame, text_col: str, id_col: str, buckets: int
 ) -> DataFrame:
@@ -2105,17 +2090,16 @@ def dsir_weights(
     and the B-row distribution is the thing worth keeping, not the
     gram stream. ``stage=True`` persists the collapsed (id, bucket,
     count) frame between the two passes instead — far smaller than the
-    token stream but still corpus-row-scaled. Measured head-to-head
-    (VERDICT r10 #5, local[32], medians of 3): sf0.1 raw 4,285 docs ->
-    two-scan 3.22 s vs staged 3.02 s; 10x corpus 42,850 docs -> 6.57 s
-    vs 4.94 s — staging wins at both scales and the gap WIDENS with
-    corpus size (the tokenize+md5 scan is the growing term). It stays
-    opt-in rather than default because the persisted frame is
-    ~n_docs x distinct-buckets rows cluster-wide: at 100 TB that is a
-    spill-prone cache whose cost depends on executor storage, while
-    the re-scan cost depends on source locality — flip it on when the
-    raw source is expensive to re-read (remote object store,
-    decompress-heavy codec), which is also the common cluster case.
+    token stream but still corpus-row-scaled. The measurements
+    disagree by setting: a local[32] A/B (medians of 3) had staging
+    win (sf0.1, 4,285 docs: 3.22 s two-scan vs 3.02 s staged; 10x
+    corpus: 6.57 vs 4.94 s), but a later interleaved A/B on a local
+    driver at sf0.1 had it lose every pair (lazy 2.45-3.48 s vs staged
+    3.26-4.06 s): the persist's fill barrier costs more than the second
+    pass it saves. So it stays off by default. Turn it on only when
+    re-reading the raw source dominates (remote object store,
+    decompress-heavy codec, cluster scale); the persisted frame is
+    ~n_docs x distinct-buckets rows and may spill.
 
     Returns (id_col, n_grams, log_weight) for every raw doc with
     non-NULL text; a doc with no grams (empty text) carries weight 0.
@@ -2207,8 +2191,8 @@ def dsir_select(
     no single-task corpus funnel); only the k survivors pass through
     the rank window. ``stage`` passes through to
     :func:`dsir_weights` (persist the collapsed raw feature frame
-    between its two passes — measured faster at 1x AND 10x, see that
-    docstring for the cache-vs-rescan trade).
+    between its two passes — slower on a local driver, worth it only
+    when the raw re-scan dominates; see that docstring).
     """
     if k < 1:
         raise ValueError("dsir_select: k must be >= 1")

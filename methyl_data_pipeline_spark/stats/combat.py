@@ -26,6 +26,15 @@ them — the algorithm decomposes into:
 Every pass is a groupBy-agg or broadcast join on already-partitioned
 keys; the only Python is the 30-iteration scalar fixed point, Arrow
 batched, O(#probes × #batches) rows — trivially parallel.
+
+The covariate variant (:func:`combat_with_covariates`) swaps passes
+1-3 for a per-probe OLS fit and shares passes 4-7 with :func:`combat`.
+The two standardizations differ in ``var_pooled``: the intercept-only
+path pools the squared deviations about ``grand_mean``, which include
+the between-batch spread, while the covariate path pools the OLS
+residuals of ``value ~ batch + covariates``, as sva does. Each
+variant's contract query (``combat_priors``, ``combat_cov_prefix``)
+pins its own form, so they stay separate.
 """
 
 from __future__ import annotations
@@ -37,18 +46,11 @@ from pyspark.sql.functions import pandas_udf
 from methyl_data_pipeline_spark import cache
 
 
-def _standardize_and_priors(
-    df: DataFrame,
-    value_col: str,
-    batch_col: str,
-    key_col: str,
-    persist_z: bool = True,
-):
-    """Passes 1-5 (the deterministic, SQL-expressible prefix of ComBat):
-    standardization plus the per-(probe, batch) moments and per-batch EB
-    hyperpriors. Returns ``(z, zb, hyper)``. Shared by :func:`combat`
-    (which runs the EB fixed point on top) and :func:`combat_priors`
-    (which exposes this prefix for oracle checking)."""
+def _standardize(
+    df: DataFrame, value_col: str, batch_col: str, key_col: str
+) -> DataFrame:
+    """Passes 1-3 of the intercept-only model: the input rows plus
+    ``grand_mean``, ``var_pooled`` and the standardized ``z``."""
     x = F.col(value_col)
 
     # pass 1: per-(probe, batch) n and mean
@@ -69,15 +71,16 @@ def _standardize_and_priors(
         (F.sum(F.pow(x - F.col("grand_mean"), 2)) / F.first("n_total")).alias("var_pooled")
     )
 
-    # pass 3: standardize. Persisted: z feeds both the per-(probe,batch)
-    # moment pass and the final adjustment join — without the cache the
-    # full fact-table lineage (2 scans + 2 shuffles) runs twice.
-    z = with_grand.join(pooled, key_col).withColumn(
+    # pass 3: standardize
+    return with_grand.join(pooled, key_col).withColumn(
         "z", (x - F.col("grand_mean")) / F.sqrt("var_pooled")
     )
-    if persist_z:
-        z = cache.track(z)
 
+
+def _priors(z: DataFrame, batch_col: str, key_col: str) -> DataFrame:
+    """Passes 4-5, shared by both ComBat variants: the per-(probe,
+    batch) moments of ``z`` joined with the per-batch EB hyperpriors
+    pooled over probes."""
     # pass 4: per-(probe, batch) moments of Z
     zb = z.groupBy(key_col, batch_col).agg(
         F.count("z").alias("n_b"),
@@ -99,7 +102,10 @@ def _standardize_and_priors(
         (F.col("_dm") * F.col("_ds2") + F.pow(F.col("_dm"), 3)) / F.col("_ds2"),
     ).drop("_dm", "_ds2")
 
-    return z, zb, hyper
+    return zb.join(F.broadcast(hyper), batch_col).select(
+        key_col, batch_col, "n_b", "gamma_hat", "delta_hat_sq",
+        "gamma_bar", "t2", "a_prior", "b_prior",
+    )
 
 
 def combat_priors(
@@ -116,17 +122,12 @@ def combat_priors(
 
     Everything here is plain groupBy-agg SQL (no iteration), so it is
     exactly oracle-checkable — it pins the inputs the EB fixed point
-    consumes. Reference M2 semantics: ``workflow.R:132-150``,
-    ``preprocessing/combat_norm.py:41-60``.
+    consumes, and it is the (unpersisted) input of every other
+    oracle-checked ComBat query. Reference M2 semantics:
+    ``workflow.R:132-150``, ``preprocessing/combat_norm.py:41-60``.
     """
     df = long_df.select(key_col, sample_col, batch_col, value_col)
-    _, zb, hyper = _standardize_and_priors(
-        df, value_col, batch_col, key_col, persist_z=False
-    )
-    return zb.join(F.broadcast(hyper), batch_col).select(
-        key_col, batch_col, "n_b", "gamma_hat", "delta_hat_sq",
-        "gamma_bar", "t2", "a_prior", "b_prior",
-    )
+    return _priors(_standardize(df, value_col, batch_col, key_col), batch_col, key_col)
 
 
 def eb_update_exprs(n, gh, d0, gamma_bar, t2, a_prior, b_prior):
@@ -140,8 +141,8 @@ def eb_update_exprs(n, gh, d0, gamma_bar, t2, a_prior, b_prior):
     Single source for :func:`combat_onestep`, :func:`combat_twostep`
     and :func:`combat_converged` — the certificate chain asserts
     residuals against exactly this algebra, so it must not fork. (The
-    Arrow ``eb_fixed_point`` kernels re-express it in NumPy; the
-    certificates exist to pin those against this form.)
+    Arrow ``eb_fixed_point`` kernel re-expresses it in NumPy; the
+    certificates exist to pin that kernel against this form.)
     """
 
     def gamma(d_prev):
@@ -154,6 +155,21 @@ def eb_update_exprs(n, gh, d0, gamma_bar, t2, a_prior, b_prior):
         )
 
     return gamma, delta
+
+
+def _prefix_updates(long_df, value_col, batch_col, key_col, sample_col):
+    """``(j, d0, gamma, delta)``: the pass-1..5 frame, its variance
+    estimate ``d0`` and :func:`eb_update_exprs` bound to its columns.
+    Single-observation batches (null ``delta_hat_sq``) fall back to a
+    unit variance estimate, matching the fixed-point kernel's
+    ``nan→1.0`` handling."""
+    j = combat_priors(long_df, value_col, batch_col, key_col, sample_col)
+    d0 = F.coalesce(F.col("delta_hat_sq"), F.lit(1.0))
+    gamma, delta = eb_update_exprs(
+        F.col("n_b").cast("double"), F.col("gamma_hat"), d0,
+        F.col("gamma_bar"), F.col("t2"), F.col("a_prior"), F.col("b_prior"),
+    )
+    return j, d0, gamma, delta
 
 
 def combat_onestep(
@@ -176,30 +192,10 @@ def combat_onestep(
     Pure column arithmetic over the pass-1..5 prefix, hence fully
     DuckDB-oracle-checkable; together with :func:`combat_priors` it
     shrinks ComBat's uncheckable core to just the convergence loop.
-    Single-observation batches (null ``delta_hat_sq``) fall back to a
-    unit variance estimate, matching the fixed-point kernel's
-    ``nan→1.0`` handling.
+    The first-iteration columns of :func:`combat_twostep`.
     """
-    df = long_df.select(key_col, sample_col, batch_col, value_col)
-    _, zb, hyper = _standardize_and_priors(
-        df, value_col, batch_col, key_col, persist_z=False
-    )
-    j = zb.join(F.broadcast(hyper), batch_col)
-    n = F.col("n_b").cast("double")
-    gh = F.col("gamma_hat")
-    d0 = F.coalesce(F.col("delta_hat_sq"), F.lit(1.0))
-    _gamma, _delta = eb_update_exprs(
-        n, gh, d0, F.col("gamma_bar"), F.col("t2"),
-        F.col("a_prior"), F.col("b_prior"),
-    )
-    g1 = _gamma(d0)
-    d1 = _delta(g1)
-    return j.select(
-        key_col,
-        batch_col,
-        "n_b",
-        g1.alias("gamma_one"),
-        d1.alias("delta_one_sq"),
+    return combat_twostep(long_df, value_col, batch_col, key_col, sample_col).select(
+        key_col, batch_col, "n_b", "gamma_one", "delta_one_sq"
     )
 
 
@@ -226,17 +222,8 @@ def combat_twostep(
     machine-verifiably smaller than the first step, shrinking
     :func:`combat`'s uncheckable core to pure loop convergence.
     """
-    df = long_df.select(key_col, sample_col, batch_col, value_col)
-    _, zb, hyper = _standardize_and_priors(
-        df, value_col, batch_col, key_col, persist_z=False
-    )
-    j = zb.join(F.broadcast(hyper), batch_col)
-    n = F.col("n_b").cast("double")
-    gh = F.col("gamma_hat")
-    d0 = F.coalesce(F.col("delta_hat_sq"), F.lit(1.0))
-    _gamma, _delta = eb_update_exprs(
-        n, gh, d0, F.col("gamma_bar"), F.col("t2"),
-        F.col("a_prior"), F.col("b_prior"),
+    j, d0, _gamma, _delta = _prefix_updates(
+        long_df, value_col, batch_col, key_col, sample_col
     )
     g1 = _gamma(d0)
     d1 = _delta(g1)
@@ -253,17 +240,11 @@ def combat_twostep(
     )
 
 
-def _eb_stars(
-    zb: DataFrame,
-    hyper: DataFrame,
-    batch_col: str,
-    key_col: str,
-    conv: float,
-    max_iter: int,
-) -> DataFrame:
-    """Pass 6: the EB fixed point, vectorized over (probe, batch) rows,
-    returned WITH the prefix columns it consumed (so callers can check
-    the fixed-point equations against the same inputs).
+def _eb_stars(j: DataFrame, conv: float, max_iter: int) -> DataFrame:
+    """Pass 6: the EB fixed point, vectorized over the (probe, batch)
+    rows of the pass-5 frame ``j``, returned WITH the prefix columns
+    it consumed (so callers can check the fixed-point equations
+    against the same inputs).
 
     conv defaults to machine level (1e-13): the loop's early exit is
     batch-global, and Arrow batch boundaries depend on partitioning —
@@ -300,21 +281,56 @@ def _eb_stars(
                 break
         return pd.DataFrame({"gamma_star": g_old, "delta_star_sq": d_old})
 
+    return j.withColumn(
+        "_eb",
+        eb_fixed_point(
+            F.col("n_b"), F.col("gamma_hat"), F.col("delta_hat_sq"),
+            F.col("gamma_bar"), F.col("t2"), F.col("a_prior"), F.col("b_prior"),
+        ),
+    ).select(
+        *j.columns,
+        F.col("_eb.gamma_star").alias("gamma_star"),
+        F.col("_eb.delta_star_sq").alias("delta_star_sq"),
+    )
+
+
+def _adjust(
+    z: DataFrame,
+    centre_col: str,
+    value_col: str,
+    batch_col: str,
+    key_col: str,
+    sample_col: str,
+    conv: float,
+    max_iter: int,
+) -> DataFrame:
+    """Passes 4-7 over a standardized ``z`` frame (which carries
+    ``var_pooled`` and its own centre column): priors, the EB fixed
+    point, then ``x* = sqrt(var_pooled)·(z − γ*)/sqrt(δ*²) + centre``.
+
+    ``z`` is persisted: it feeds both the pass-4 moments and the final
+    join, and without the cache its full fact-table lineage runs twice.
+    The stars frame is (probes × batches), on the fact table's
+    partitioning key, so AQE plans a co-partitioned join.
+    """
+    from methyl_data_pipeline_spark.deploy import ensure_importable
+
+    ensure_importable(z.sparkSession)
+    z = cache.track(z)
+    stars = _eb_stars(_priors(z, batch_col, key_col), conv, max_iter).select(
+        key_col, batch_col, "gamma_star", "delta_star_sq"
+    )
+    out_col = f"{value_col}_combat"
     return (
-        zb.join(F.broadcast(hyper), batch_col)
+        z.join(stars, [key_col, batch_col])
         .withColumn(
-            "_eb",
-            eb_fixed_point(
-                F.col("n_b"), F.col("gamma_hat"), F.col("delta_hat_sq"),
-                F.col("gamma_bar"), F.col("t2"), F.col("a_prior"), F.col("b_prior"),
-            ),
+            out_col,
+            F.sqrt("var_pooled")
+            * (F.col("z") - F.col("gamma_star"))
+            / F.sqrt("delta_star_sq")
+            + F.col(centre_col),
         )
-        .select(
-            key_col, batch_col, "n_b", "gamma_hat", "delta_hat_sq",
-            "gamma_bar", "t2", "a_prior", "b_prior",
-            F.col("_eb.gamma_star").alias("gamma_star"),
-            F.col("_eb.delta_star_sq").alias("delta_star_sq"),
-        )
+        .select(key_col, sample_col, batch_col, value_col, out_col)
     )
 
 
@@ -334,29 +350,10 @@ def combat(
     (``preprocessing/combat_norm.py:28-30``); compose with
     ``operators.qc.drop_incomplete_probes``.
     """
-    from methyl_data_pipeline_spark.deploy import ensure_importable
-
-    ensure_importable(long_df.sparkSession)
     df = long_df.select(key_col, sample_col, batch_col, value_col)
-    z, zb, hyper = _standardize_and_priors(df, value_col, batch_col, key_col)
-
-    stars = _eb_stars(zb, hyper, batch_col, key_col, conv, max_iter).select(
-        key_col, batch_col, "gamma_star", "delta_star_sq"
-    )
-
-    # pass 7: adjust. stars is (probes × batches) — same partitioning key
-    # as the fact table, so AQE plans a co-partitioned join.
-    out_col = f"{value_col}_combat"
-    return (
-        z.join(stars, [key_col, batch_col])
-        .withColumn(
-            out_col,
-            F.sqrt("var_pooled")
-            * (F.col("z") - F.col("gamma_star"))
-            / F.sqrt("delta_star_sq")
-            + F.col("grand_mean"),
-        )
-        .select(key_col, sample_col, batch_col, value_col, out_col)
+    z = _standardize(df, value_col, batch_col, key_col)
+    return _adjust(
+        z, "grand_mean", value_col, batch_col, key_col, sample_col, conv, max_iter
     )
 
 
@@ -390,27 +387,16 @@ def combat_converged(
     from methyl_data_pipeline_spark.deploy import ensure_importable
 
     ensure_importable(long_df.sparkSession)
-    df = long_df.select(key_col, sample_col, batch_col, value_col)
-    _, zb, hyper = _standardize_and_priors(
-        df, value_col, batch_col, key_col, persist_z=False
+    j, _, _gamma, _delta = _prefix_updates(
+        long_df, value_col, batch_col, key_col, sample_col
     )
-    s = _eb_stars(zb, hyper, batch_col, key_col, conv, max_iter)
-    n = F.col("n_b").cast("double")
-    gh = F.col("gamma_hat")
-    dh2 = F.coalesce(F.col("delta_hat_sq"), F.lit(1.0))
     gs, ds = F.col("gamma_star"), F.col("delta_star_sq")
-    _gamma, _delta = eb_update_exprs(
-        n, gh, dh2, F.col("gamma_bar"), F.col("t2"),
-        F.col("a_prior"), F.col("b_prior"),
-    )
-    g_rhs = _gamma(ds)
-    d_rhs = _delta(gs)
-    return s.select(
+    return _eb_stars(j, conv, max_iter).select(
         key_col,
         batch_col,
         "n_b",
-        F.abs(gs - g_rhs).alias("gamma_residual"),
-        F.abs(ds - d_rhs).alias("delta_residual"),
+        F.abs(gs - _gamma(ds)).alias("gamma_residual"),
+        F.abs(ds - _delta(gs)).alias("delta_residual"),
     )
 
 
@@ -519,92 +505,19 @@ def combat_with_covariates(
          independent, so this IS a grouped operation:
          ``applyInPandas`` per probe, lstsq on the small (n_samples ×
          n_params) design, emitting Z and the protected stand_mean;
-      2. EB hyperpriors + fixed point + adjustment — identical agg
-         machinery to the no-covariate path (pools ACROSS probes, so
-         it stays outside the grouped UDF).
+      2. EB hyperpriors + fixed point + adjustment — the same passes
+         4-7 as the no-covariate path (pools ACROSS probes, so it
+         stays outside the grouped UDF).
 
     The covariate design is built driver-side from the distinct
     (batch, covariate) levels — a dimension-sized lookup, broadcast
     into the UDF closure.
     """
-    from methyl_data_pipeline_spark.deploy import ensure_importable
-
-    ensure_importable(long_df.sparkSession)
-    z = cache.track(
-        covariate_standardize(
-            long_df, value_col, batch_col, covariate_cols or [],
-            key_col, sample_col,
-        )
+    z = covariate_standardize(
+        long_df, value_col, batch_col, covariate_cols, key_col, sample_col
     )
-
-    # EB machinery over Z — identical to the intercept-only path.
-    zb = z.groupBy(key_col, batch_col).agg(
-        F.count("z").alias("n_b"),
-        F.avg("z").alias("gamma_hat"),
-        F.var_samp("z").alias("delta_hat_sq"),
-    )
-    hyper = zb.groupBy(batch_col).agg(
-        F.avg("gamma_hat").alias("gamma_bar"),
-        F.var_samp("gamma_hat").alias("t2"),
-        F.avg("delta_hat_sq").alias("_dm"),
-        F.var_samp("delta_hat_sq").alias("_ds2"),
-    ).withColumn(
-        "a_prior", (2.0 * F.col("_ds2") + F.pow(F.col("_dm"), 2)) / F.col("_ds2")
-    ).withColumn(
-        "b_prior",
-        (F.col("_dm") * F.col("_ds2") + F.pow(F.col("_dm"), 3)) / F.col("_ds2"),
-    ).drop("_dm", "_ds2")
-
-    @pandas_udf("struct<gamma_star double, delta_star_sq double>")
-    def eb_fixed_point(
-        n: pd.Series, gamma_hat: pd.Series, delta_hat_sq: pd.Series,
-        gamma_bar: pd.Series, t2: pd.Series, a: pd.Series, b: pd.Series,
-    ) -> pd.DataFrame:
-        import numpy as np
-
-        n_ = n.to_numpy(dtype=float)
-        gh = gamma_hat.to_numpy(dtype=float)
-        dh2 = np.nan_to_num(delta_hat_sq.to_numpy(dtype=float), nan=1.0)
-        gb, t2_ = gamma_bar.to_numpy(float), t2.to_numpy(float)
-        a_, b_ = a.to_numpy(float), b.to_numpy(float)
-        g_old, d_old = gh.copy(), dh2.copy()
-        for _ in range(max_iter):
-            g_new = (t2_ * n_ * gh + d_old * gb) / (t2_ * n_ + d_old)
-            sum2 = (n_ - 1.0) * dh2 + n_ * (gh - g_new) ** 2
-            d_new = (0.5 * sum2 + b_) / (n_ / 2.0 + a_ - 1.0)
-            change = np.maximum(
-                np.abs(g_new - g_old) / np.maximum(np.abs(g_old), 1e-12),
-                np.abs(d_new - d_old) / np.maximum(np.abs(d_old), 1e-12),
-            )
-            g_old, d_old = g_new, d_new
-            if float(change.max(initial=0.0)) < conv:
-                break
-        return pd.DataFrame({"gamma_star": g_old, "delta_star_sq": d_old})
-
-    stars = (
-        zb.join(F.broadcast(hyper), batch_col)
-        .withColumn(
-            "_eb",
-            eb_fixed_point(
-                F.col("n_b"), F.col("gamma_hat"), F.col("delta_hat_sq"),
-                F.col("gamma_bar"), F.col("t2"), F.col("a_prior"), F.col("b_prior"),
-            ),
-        )
-        .select(key_col, batch_col, F.col("_eb.gamma_star").alias("gamma_star"),
-                F.col("_eb.delta_star_sq").alias("delta_star_sq"))
-    )
-
-    out_col = f"{value_col}_combat"
-    return (
-        z.join(stars, [key_col, batch_col])
-        .withColumn(
-            out_col,
-            F.sqrt("var_pooled")
-            * (F.col("z") - F.col("gamma_star"))
-            / F.sqrt("delta_star_sq")
-            + F.col("stand_mean"),
-        )
-        .select(key_col, sample_col, batch_col, value_col, out_col)
+    return _adjust(
+        z, "stand_mean", value_col, batch_col, key_col, sample_col, conv, max_iter
     )
 
 

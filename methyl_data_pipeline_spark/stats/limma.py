@@ -10,16 +10,21 @@ per-group UDF (SURVEY §2.11) — it is a three-phase DataFrame program:
   2. global EB prior fit over per-probe pooled variances (tiny agg)
   3. broadcast the 2-value prior back; closed-form moderated t
 
-EB prior (documented deviation from limma): limma fits an F-distribution
-to the s² (``fitFDist``, digamma inversion). We use the scaled-chi-square
-method-of-moments closed form — treating s² ~ s0²·χ²(d0)/d0 gives
-E[s²]=s0², Var[s²]=2·s0⁴/d0, hence::
+EB prior: two fits of (d0, s0²), one moderation step. limma fits an
+F-distribution to the s² (``fitFDist``, digamma inversion);
+:func:`_fit_f_dist_prior` does the same, and it is what
+``plans.pipeline.run_methylation_pipeline`` runs. The default
+(``prior_method="moments"``, and the only prior of the contrasts and
+F paths) is the scaled-chi-square method-of-moments closed form —
+treating s² ~ s0²·χ²(d0)/d0 gives E[s²]=s0², Var[s²]=2·s0⁴/d0, hence::
 
     s0² = mean(s²)          d0 = 2·mean(s²)² / var(s²)
 
-which is deterministic, SQL-expressible (oracle-checkable), and within
-a few percent of fitFDist on well-behaved data. Posterior variance and
-moderated t follow limma exactly given (d0, s0²)::
+which is deterministic, SQL-expressible (oracle-checkable, so the
+contract queries use it), and within a few percent of fitFDist on
+well-behaved data. Both fits cap d0 at 1e12 when the s² show no excess
+spread. Posterior variance and moderated t follow limma exactly given
+(d0, s0²)::
 
     s̃²_g = (d0·s0² + df_g·s²_g) / (d0 + df_g)
     t_g   = (mean1_g - mean2_g) / sqrt(s̃²_g · (1/n1_g + 1/n2_g))
@@ -45,7 +50,6 @@ def moderated_t_two_group(
     value_col: str = "mval",
     key_col: str = "probe_id",
     with_p_values: bool = False,
-    persist_intermediate: bool = True,
     prior_method: str = "moments",
 ) -> DataFrame:
     """Per-key moderated t between two groups of samples.
@@ -63,12 +67,6 @@ def moderated_t_two_group(
     moderated variance, moderated t and df. Keys lacking >=2 samples in
     either group are dropped (the reference's insufficient-sample guard,
     plots.R:73-75).
-
-    ``persist_intermediate``: the EB prior (phase 2) and the final join
-    (phase 3) both consume the phase-1 aggregate; without caching,
-    Catalyst re-derives it — i.e. scans the fact table twice. per_key is
-    post-aggregation (one row per key), so caching it trades a little
-    memory/disk for halving the dominant scan.
     """
     a, b = F.lit(group_a), F.lit(group_b)
     v = F.col(value_col)
@@ -95,37 +93,16 @@ def moderated_t_two_group(
         )
         .withColumn("logFC", F.col("mean1") - F.col("mean2"))
     )
-    if persist_intermediate:
-        per_key = cache.track(per_key)
+    # prior and moderation both read per_key: uncached, the facts scan twice
+    per_key = cache.track(per_key)
 
-    # Phase 2 — EB prior over all keys: a 1-row aggregate, broadcast by
-    # Catalyst as a scalar-subquery-like cross join.
-    if prior_method == "fitFDist":
-        prior = _fit_f_dist_prior(per_key)
-    else:
-        # degenerate guard mirroring the fitFDist path (limma caps the
-        # prior df when between-key variance vanishes): var_samp is 0
-        # when all pooled variances are equal and NULL with a single
-        # key — either would otherwise null out d0 and silently null
-        # every downstream statistic.
-        prior = per_key.agg(
-            F.avg("s2").alias("s0_sq"),
-            F.when(
-                F.var_samp("s2") > 0,
-                2.0 * F.pow(F.avg("s2"), 2) / F.var_samp("s2"),
-            )
-            .otherwise(F.lit(1e12))
-            .alias("d0"),
-        )
+    # Phase 2 — EB prior over all keys (one row).
+    fit = _fit_f_dist_prior if prior_method == "fitFDist" else _moment_prior
+    prior = fit(per_key)
 
     # Phase 3 — closed-form moderated statistics.
     out = (
-        per_key.crossJoin(F.broadcast(prior))
-        .withColumn(
-            "s2_post",
-            (F.col("d0") * F.col("s0_sq") + F.col("df") * F.col("s2"))
-            / (F.col("d0") + F.col("df")),
-        )
+        _moderate(per_key, prior, "df")
         .withColumn(
             "t_mod",
             F.col("logFC")
@@ -140,6 +117,36 @@ def moderated_t_two_group(
         ensure_importable(long_df.sparkSession)
         out = out.withColumn("p_value", _t_sf_two_sided(F.col("t_mod"), F.col("df_mod")))
     return out
+
+
+def _moment_prior(per_key: DataFrame) -> DataFrame:
+    """The scaled-chi-square moment prior ``(s0_sq, d0)`` over the
+    ``s2`` column, as a 1-row frame.
+
+    Degenerate guard mirroring the fitFDist path (limma caps the prior
+    df when between-key variance vanishes): var_samp is 0 when all
+    pooled variances are equal and NULL with a single key — either
+    would otherwise divide by zero (an error under ANSI) or null out d0
+    and every downstream statistic.
+    """
+    return per_key.agg(
+        F.avg("s2").alias("s0_sq"),
+        F.when(
+            F.var_samp("s2") > 0,
+            2.0 * F.pow(F.avg("s2"), 2) / F.var_samp("s2"),
+        )
+        .otherwise(F.lit(1e12))
+        .alias("d0"),
+    )
+
+
+def _moderate(per_key: DataFrame, prior: DataFrame, df_col: str) -> DataFrame:
+    """Broadcast the 1-row prior onto every key and add the posterior
+    variance ``s2_post = (d0·s0² + df·s²) / (d0 + df)``."""
+    d0, df = F.col("d0"), F.col(df_col)
+    return per_key.crossJoin(F.broadcast(prior)).withColumn(
+        "s2_post", (d0 * F.col("s0_sq") + df * F.col("s2")) / (d0 + df)
+    )
 
 
 def _fit_f_dist_prior(per_key: DataFrame) -> DataFrame:
@@ -211,7 +218,6 @@ def moderated_t_contrasts(
     pairs: list[tuple[str, str]],
     value_col: str = "mval",
     key_col: str = "probe_id",
-    persist_intermediate: bool = True,
 ) -> DataFrame:
     """All-pairwise moderated contrasts with a SHARED residual variance —
     the actual limma model (M6: ``makeContrasts`` pairwise diffs,
@@ -275,23 +281,9 @@ def moderated_t_contrasts(
         .filter(F.col("df") >= 1)
         .withColumn("s2", ss / F.col("df"))
     )
-    if persist_intermediate:
-        per_key = cache.track(per_key)
-
-    prior = per_key.agg(
-        F.avg("s2").alias("s0_sq"),
-        F.when(
-            F.var_samp("s2") > 0,
-            2.0 * F.pow(F.avg("s2"), 2) / F.var_samp("s2"),
-        )
-        .otherwise(F.lit(1e12))  # degenerate guard, same as the t path
-        .alias("d0"),
-    )
-    based = per_key.crossJoin(F.broadcast(prior)).withColumn(
-        "s2_post",
-        (F.col("d0") * F.col("s0_sq") + F.col("df") * F.col("s2"))
-        / (F.col("d0") + F.col("df")),
-    )
+    # prior and moderation both read per_key: uncached, the facts scan twice
+    per_key = cache.track(per_key)
+    based = _moderate(per_key, _moment_prior(per_key), "df")
 
     outs = []
     for ga, gb in pairs:
@@ -369,7 +361,6 @@ def moderated_f_anova(
     group_col: str,
     value_col: str = "mval",
     key_col: str = "probe_id",
-    persist_intermediate: bool = True,
     with_p_values: bool = False,
     moment_round: int | None = None,
 ) -> DataFrame:
@@ -440,20 +431,11 @@ def moderated_f_anova(
         .withColumn("s2", F.col("_ss_within") / F.col("df2"))
         .withColumn("ms_between", F.col("_ss_between") / (F.col("n_groups") - 1))
     )
-    if persist_intermediate:
-        per_key = cache.track(per_key)
+    # prior and moderation both read per_key: uncached, the facts scan twice
+    per_key = cache.track(per_key)
 
-    prior = per_key.agg(
-        F.avg("s2").alias("s0_sq"),
-        (2.0 * F.pow(F.avg("s2"), 2) / F.var_samp("s2")).alias("d0"),
-    )
     out = (
-        per_key.crossJoin(F.broadcast(prior))
-        .withColumn(
-            "s2_post",
-            (F.col("d0") * F.col("s0_sq") + F.col("df2") * F.col("s2"))
-            / (F.col("d0") + F.col("df2")),
-        )
+        _moderate(per_key, _moment_prior(per_key), "df2")
         .withColumn("f_mod", F.col("ms_between") / F.col("s2_post"))
         .withColumn("df1", F.col("n_groups") - 1)
         .withColumn("df2_mod", F.col("d0") + F.col("df2"))

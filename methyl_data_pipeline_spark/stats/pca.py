@@ -382,7 +382,6 @@ def pca_scores(
     key_col: str = "probe_id",
     sample_col: str = "sample_id",
     gram_threshold: int = 1024,
-    blocked_gram: bool = False,
 ) -> tuple[DataFrame, list[float]]:
     """Per-sample PCA scores (PC1..PCk) + explained-variance ratios.
 
@@ -390,12 +389,11 @@ def pca_scores(
 
     - ``n_samples <= gram_threshold``: the n×n Gram trick — one
       probe-keyed self-join shuffle, tiny K eigendecomposed driver-side.
-      Exact, and the right call at the reference's n = 10²-10³.
-      ``blocked_gram=True`` swaps in :func:`gram_matrix_blocked` (the
+      Exact, and the right call at the reference's n = 10²-10³. It
+      runs :func:`gram_matrix`, the plan the oracle-checked
+      ``pca_gram`` query pins; :func:`gram_matrix_blocked` (the
       mapInPandas partial-XᵀX plan, O(data) instead of O(probes·n²)
-      shuffle) — the deployment switch for huge corpora with moderate
-      n; defaults off so the oracle-checked certificate queries keep
-      exercising the exact plan this path runs.
+      shuffle) computes the same matrix and is tested for parity.
     - above the threshold: distributed truncated SVD
       (:func:`_pca_scores_distributed`) — no n² collect, no d×d
       covariance; survives n = 10⁵ samples × d = 10⁶ probes.
@@ -420,8 +418,7 @@ def pca_scores(
     # (upper triangle — K is symmetric, mirror driver-side). Shares
     # gram_matrix so the oracle-checked contract query exercises the
     # exact plan this path runs.
-    gram_fn = gram_matrix_blocked if blocked_gram else gram_matrix
-    gram_rows = gram_fn(
+    gram_rows = gram_matrix(
         long_df, value_col=value_col, key_col=key_col,
         sample_col=sample_col, scale=scale,
     ).collect()

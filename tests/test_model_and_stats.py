@@ -396,6 +396,41 @@ def test_moderated_f_p_values(spark):
     assert out.set_index("probe_id")["p_value"].idxmin() == "cg0000"
 
 
+def test_moderated_f_degenerate_prior_matches_t_paths(spark):
+    """Every probe with the same pooled s² leaves the moment prior no
+    spread to fit: the F path must cap d0 at 1e12 like the t and
+    contrasts paths, not divide by zero (ANSI) or, with a single
+    probe, null every statistic."""
+    from methyl_data_pipeline_spark.stats.limma import (
+        moderated_f_anova,
+        moderated_t_contrasts,
+    )
+
+    rows = [
+        (f"cg{p}", f"{g}{i}", g, centre + dev)
+        for p in range(2)
+        for g, centre in (("A", 0.0), ("B", 1.0), ("C", 3.0))
+        for i, dev in enumerate((-1.0, 0.0, 1.0))
+    ]
+    df = spark.createDataFrame(rows, ["probe_id", "sample_id", "grp", "mval"])
+
+    f = moderated_f_anova(df, "grp").toPandas()
+    assert len(f) == 2
+    assert (f["df2_mod"] == 1e12 + 6).all()
+    np.testing.assert_allclose(f["s2_post"], 1.0, rtol=1e-12)
+    # ms_between = 3·((0-4/3)² + (1-4/3)² + (3-4/3)²) / 2 = 7
+    np.testing.assert_allclose(f["f_mod"], 7.0, rtol=1e-9)
+
+    t = moderated_t_two_group(df, "grp", "A", "B").toPandas()
+    c = moderated_t_contrasts(df, "grp", [("A", "B")]).toPandas()
+    assert (t["d0"] == 1e12).all()
+    assert (c["df_mod"] == 1e12 + 4).all()
+
+    one = moderated_f_anova(df.filter(F.col("probe_id") == "cg0"), "grp").toPandas()
+    assert len(one) == 1 and one["f_mod"].notna().all()
+    np.testing.assert_allclose(one["f_mod"], 7.0, rtol=1e-9)
+
+
 def test_pipeline_dmp_multigroup_matches_numpy_anova(spark):
     """run_methylation_pipeline with >2 dmp_groups routes the DMP stage
     through the omnibus moderated F (VERDICT r4 #5): f_mod must match a

@@ -8,6 +8,10 @@ pathological plan shape, these fail before the bench does.
 
 from __future__ import annotations
 
+import contextlib
+import io
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,9 +19,21 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def _formatted(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def _distinct_persists(plan: str) -> set[str]:
+    """The distinct cached plans an explain output reads. References to
+    one cache render with re-mapped expression ids (#0L vs #56L), so
+    the ids are stripped before deduping the full Arguments line."""
+    return {
+        re.sub(r"#\d+", "", ln.strip())
+        for ln in plan.splitlines()
+        if ln.strip().startswith("Arguments:") and "StorageLevel" in ln
+    }
 
 
 @pytest.fixture(scope="module")
@@ -58,19 +74,9 @@ def test_curate_plan_has_exactly_one_narrow_persist(docs):
     bench = docs.filter(F.col("doc_id") % 13 == 0)
     corpus = docs.filter(F.col("doc_id") % 13 != 0)
     plan = _formatted(curate(corpus, bench))
-    # distinct cached plans, not reference counts: every occurrence of
-    # a second InMemoryRelation introduces a second "cachedPlan" id;
-    # the narrow red frame may legitimately be referenced many times.
-    import re
-
-    cached_cols = set()
-    for ln in plan.splitlines():
-        if "InMemoryRelation" in ln and "Arguments" not in ln:
-            continue
-        if ln.strip().startswith("Arguments:") and "StorageLevel" in ln:
-            # references to one cache render with re-mapped expression
-            # ids (#0L vs #56L) — strip them before deduping
-            cached_cols.add(re.sub(r"#\d+", "", ln.strip())[:120])
+    # distinct cached plans, not reference counts: the narrow red frame
+    # may legitimately be referenced many times.
+    cached_cols = _distinct_persists(plan)
     assert len(cached_cols) <= 1, (
         f"expected at most one distinct persist in the curate plan, "
         f"saw {len(cached_cols)}: {sorted(cached_cols)}"
@@ -92,3 +98,28 @@ def test_bpe_encode_word_stream_is_spread(docs):
         "bpe_encode lost the word-stream spread — the tokenize explode "
         "will serialize on a 1-partition scan"
     )
+
+
+def test_combat_plan_has_one_eb_kernel_and_one_persisted_z(spark):
+    """ComBat runs exactly one Arrow kernel (the EB fixed point) and
+    persists exactly one frame, the standardized ``z``: it feeds both
+    the pass-4 moments and the final adjustment join, so without the
+    persist the fact-table lineage runs twice."""
+    from methyl_data_pipeline_spark import cache
+    from methyl_data_pipeline_spark.stats.combat import combat
+
+    rows = [
+        (f"cg{p:03d}", f"s{s}", f"R{s % 2}", 0.1 * p + 0.01 * s * s)
+        for p in range(20)
+        for s in range(6)
+    ]
+    df = spark.createDataFrame(rows, ["probe_id", "sample_id", "run", "beta"])
+    try:
+        plan = _formatted(combat(df))
+    finally:
+        cache.release_all()
+    kernels = re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)
+    assert len(kernels) == 1, plan
+    persists = _distinct_persists(plan)
+    assert len(persists) == 1, sorted(persists)
+    assert re.search(r"[\[ ]z[,\]]", next(iter(persists))), persists

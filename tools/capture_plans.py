@@ -10,6 +10,8 @@ plan evidence for optimization rounds.
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import os
 import sys
 
@@ -36,10 +38,10 @@ def main() -> int:
             print(f"# unknown query {name}", file=sys.stderr)
             continue
         try:
-            df = qs[name](spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            buf = io.StringIO()
+            with contextlib.redirect_stdout(buf):
+                qs[name](spark, args.sf_dir).explain("formatted")
+            plan = buf.getvalue()
         except Exception as exc:
             plan = f"EXPLAIN FAILED: {exc}"
         path = os.path.join(outdir, f"{name}_{args.tag}.txt")
