@@ -7,7 +7,8 @@ after the dependent action has run — with :func:`release_all`.
 
 Without this, a session that runs many limma/ComBat/LSH queries
 accumulates storage-memory blocks until Spark's LRU eviction starts
-churning (VERDICT r2, "cache leak").
+churning (VERDICT r2, "cache leak"). A reuse point whose lineage must
+not be re-planned per reference is cut instead (:func:`cut`).
 """
 
 from __future__ import annotations
@@ -25,6 +26,23 @@ def track(df: DataFrame, storage_level=None) -> DataFrame:
     persisted = df.persist(storage_level) if storage_level is not None else df.persist()
     _TRACKED.append(persisted)
     return persisted
+
+
+def cut(df: DataFrame, reliable: bool = False) -> DataFrame:
+    """Materialize ``df`` and truncate its lineage, so every later
+    reference reads a block scan. ``persist()`` is not enough at a
+    reuse point referenced many times: each reference re-inlines the
+    cached frame's whole logical subtree (CCNet's composed plan
+    measured 991 exchanges / 288 broadcast joins — ~30 s of pure
+    Catalyst analysis before the first task).
+
+    ``reliable=True`` writes to the configured checkpoint dir (survives
+    executor loss, as dynamic allocation needs); the default keeps
+    executor-local blocks, the right trade on a stable cluster. Not
+    tracked: ``unpersist`` does not free checkpoint blocks (only
+    cache-manager entries); ContextCleaner does once the references
+    drop."""
+    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
 
 
 def release_all(blocking: bool = False) -> int:

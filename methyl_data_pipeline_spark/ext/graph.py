@@ -20,19 +20,15 @@ The converged label IS the component's minimum node id — exactly the
 deterministic "keep smallest id" winner rule the exact-dedup path uses.
 
 Checkpoint durability: both loops truncate lineage per round with
-``localCheckpoint`` by default, which stores blocks on executors
-NON-reliably — if an executor is lost (or dynamic allocation reclaims
-it) the checkpointed rounds cannot be recomputed and downstream actions
-fail unrecoverably. On a long-lived cluster with
-``spark.dynamicAllocation.enabled`` (or any fault-tolerance
-requirement), pass ``reliable_checkpoint=True`` to use
-``DataFrame.checkpoint`` instead (requires
-``spark.sparkContext.setCheckpointDir(...)``); it costs an HDFS/object
--store write per round but survives executor loss. Superseded rounds'
-checkpoint blocks are released by Spark's ContextCleaner once the
-Python/JVM references are dropped (``DataFrame.unpersist`` does NOT
-free checkpoint blocks — only cache-manager entries), which is why the
-loops simply drop references instead of calling unpersist.
+:func:`cache.cut`, executor-local by default — if an executor is lost
+(or dynamic allocation reclaims it) the checkpointed rounds cannot be
+recomputed and downstream actions fail unrecoverably. Under dynamic
+allocation or any fault-tolerance requirement, pass
+``reliable_checkpoint=True`` (requires
+``spark.sparkContext.setCheckpointDir(...)``): one HDFS/object-store
+write per round that survives executor loss. Superseded rounds are
+freed by ContextCleaner, not by ``unpersist`` (see :func:`cache.cut`),
+which is why the loops simply drop references.
 """
 
 from __future__ import annotations
@@ -40,15 +36,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from methyl_data_pipeline_spark import cache
-
-
-def _truncate_lineage(df: DataFrame, reliable: bool) -> DataFrame:
-    """Materialize ``df`` and cut its lineage. ``reliable=True`` writes
-    to the configured checkpoint dir (survives executor loss; needed
-    under dynamic allocation); default is executor-local blocks."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def _driver_components(rows, spark, schema) -> DataFrame:
@@ -152,7 +139,7 @@ def connected_components(
         # checkpoint (not persist): each round's plan references the
         # previous round's, so lineage — and Catalyst's cost to
         # plan/render it — grows geometrically without truncation
-        stepped = _truncate_lineage(
+        stepped = cache.cut(
             labels.join(nbr_min, "u", "left").select(
                 "u",
                 F.col("label").alias("_old"),
@@ -163,11 +150,9 @@ def connected_components(
             reliable_checkpoint,
         )
         changed = stepped.filter(F.col("label") < F.col("_old")).count()
-        # rebind and drop the superseded round's reference: its
-        # checkpoint blocks are freed by ContextCleaner GC, not by
-        # unpersist() (which only touches cache-manager entries); label
-        # frames are (node, label) pairs, so at most O(log-diameter)
-        # small block sets are ever pending collection
+        # rebind and drop the superseded round (ContextCleaner frees its
+        # blocks); label frames are (node, label) pairs, so at most
+        # O(log-diameter) small block sets are ever pending collection
         labels = stepped.select("u", "label")
         if changed == 0:
             return labels.select(F.col("u").alias("node"), F.col("label").alias("component"))
@@ -260,7 +245,7 @@ def connected_components_contraction(
         # the propagation loop); eager materialization happens before
         # the fingerprint action. Superseded rounds are released by
         # ContextCleaner once their references drop (module docstring).
-        stepped = _truncate_lineage(
+        stepped = cache.cut(
             _small_star(_large_star(e)), reliable_checkpoint
         )
         new_fp = _fingerprint(stepped)

@@ -43,30 +43,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from methyl_data_pipeline_spark import cache
 from methyl_data_pipeline_spark.ext.dedup import line_dedup, url_dedup
 from methyl_data_pipeline_spark.ext.text import (
     lang_id_nb,
     perplexity_buckets,
     train_lang_weights,
 )
-
-
-def _cut(df: DataFrame, reliable: bool) -> DataFrame:
-    """Materialize ``df`` and TRUNCATE its lineage (the ext.graph
-    pattern). A plain ``persist()`` is not enough here: every
-    downstream reference re-inlines the cached frame's full logical
-    subtree, and this pipeline references its reuse points so many
-    times (lang-id fit + score, LM stream + model broadcasts, tercile
-    part map, final stats join) that the composed physical plan
-    measured 991 exchanges / 288 broadcast joins — ~30 s of pure
-    Catalyst analysis before the first task. Checkpointing collapses
-    each reference to a block scan. ``reliable=True`` writes to the
-    configured checkpoint dir (survives executor loss — required
-    under dynamic allocation); the default keeps executor-local
-    blocks, the right trade on a stable cluster."""
-    if reliable:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
 
 
 def run_ccnet_pipeline(
@@ -105,8 +88,8 @@ def run_ccnet_pipeline(
     )
     # reuse point 1: the line-deduped frame feeds the lang-id fit, the
     # lang-id scoring pass, the bigram LM fit+score, and the final
-    # stats join — materialized once, lineage cut (see _cut)
-    clean = _cut(
+    # stats join — materialized once, lineage cut (see cache.cut)
+    clean = cache.cut(
         ld.filter(F.trim(F.col(text_col)) != ""), reliable_checkpoint
     )
 
@@ -119,8 +102,8 @@ def run_ccnet_pipeline(
     # frame is (_id, _b, _c): corpus-row-bounded and narrow. Passing
     # the all-docs featurize is exact for the trainer (its labels
     # inner join applies the label filter; operator docstring
-    # contract). Shared via _cut, NOT cache.track, for the same
-    # reason as the pipeline's other reuse points (see _cut): a
+    # contract). Shared via cache.cut, NOT cache.track, for the same
+    # reason as the pipeline's other reuse points (see cache.cut): a
     # cache.track'd InMemoryRelation here re-inlines into the trainer
     # broadcast + both scorer branches and measured erratic
     # first-run stalls (12-118 s); the checkpointed share is stable.
@@ -128,7 +111,7 @@ def run_ccnet_pipeline(
     # none 10.9/11.1/11.4 s vs shared 9.3/10.0/8.5 s.
     from methyl_data_pipeline_spark.ext.text import _doc_bucket_counts
 
-    dbc = _cut(
+    dbc = cache.cut(
         _doc_bucket_counts(clean, text_col, id_col, buckets),
         reliable_checkpoint,
     )
@@ -139,7 +122,7 @@ def run_ccnet_pipeline(
     # reuse point 2: the NB fit + score + argmax subtree is consumed by
     # the LM token-stream materialization, the tercile window's
     # broadcast part_col distinct, and the ranked join
-    pred = _cut(
+    pred = cache.cut(
         lang_id_nb(
             clean, w, text_col=text_col, id_col=id_col, buckets=buckets,
             features=dbc,

@@ -1,4 +1,4 @@
-"""Physical-plan-shape invariants for the r15 optimization round.
+"""Physical-plan-shape invariants.
 
 These pin the *mechanism* of the landed optimizations, not the output
 (output parity is covered by the oracle batteries and the existing
@@ -12,6 +12,7 @@ import contextlib
 import io
 import re
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -123,3 +124,92 @@ def test_combat_plan_has_one_eb_kernel_and_one_persisted_z(spark):
     persists = _distinct_persists(plan)
     assert len(persists) == 1, sorted(persists)
     assert re.search(r"[\[ ]z[,\]]", next(iter(persists))), persists
+
+
+def _run_pipeline(spark, inputs, run_bmiq=True, run_combat=True, **kw):
+    from methyl_data_pipeline_spark.plans.pipeline import run_methylation_pipeline
+
+    meth, probes, samples = (
+        spark.read.parquet(str(inputs / f))
+        for f in ("meth.parquet", "probes.parquet", "samples.parquet")
+    )
+    return run_methylation_pipeline(
+        meth, probes, samples, run_bmiq=run_bmiq, run_combat=run_combat, **kw
+    )
+
+
+@pytest.fixture(scope="module")
+def methyl_inputs(tmp_path_factory):
+    """A small methyl_dmp-shaped input: two batches, two genotypes, one
+    QC-failing sample."""
+    from perfbench import gen
+
+    d = tmp_path_factory.mktemp("methyl")
+    gen.methyl_inputs(0, 300, 6, str(d))
+    return d
+
+
+@pytest.fixture(scope="module")
+def full_run(spark, methyl_inputs):
+    return _run_pipeline(
+        spark, methyl_inputs, top_k=60, pca_k=2, dmp_groups=("genotype", "WT", "KO")
+    )
+
+
+def test_pipeline_dmp_plans_from_the_cut_lineage(full_run):
+    """The DMP stage reads the cut ComBat output: no BMIQ grouped-map
+    node and only limma/BH's own shuffles. With lazy persists at the
+    reuse points instead, every action re-planned the whole QC -> BMIQ
+    -> ComBat lineage (50 exchanges in this plan at the methyl_dmp
+    benchmark size)."""
+    plan = _formatted(full_run.dmp)
+    assert not re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)
+    exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
+    assert len(exchanges) <= 10, f"{len(exchanges)} exchanges in the dmp plan"
+
+
+@pytest.mark.parametrize("run_bmiq", [False, True])
+@pytest.mark.parametrize("run_combat", [False, True])
+def test_pipeline_cuts_each_reuse_point_once(
+    spark, methyl_inputs, monkeypatch, run_bmiq, run_combat
+):
+    """QC, BMIQ and ComBat each end in at most one lineage cut, and
+    ``normalized`` always reads exactly one cut: its plan has a single
+    leaf, an RDD scan."""
+    from methyl_data_pipeline_spark import cache
+
+    cuts = []
+    real_cut = cache.cut
+
+    def counting_cut(df, *a, **kw):
+        cuts.append(df)
+        return real_cut(df, *a, **kw)
+
+    monkeypatch.setattr(cache, "cut", counting_cut)
+    try:
+        res = _run_pipeline(spark, methyl_inputs, run_bmiq, run_combat, top_k=60, pca_k=0)
+        assert len(cuts) == 1 + run_bmiq + run_combat
+        leaves = re.findall(r"^\(\d+\) (\w*Scan\b[^\n]*)", _formatted(res.normalized), re.M)
+        assert len(leaves) == 1 and leaves[0].startswith("Scan ExistingRDD"), leaves
+        assert "beta_final" in res.normalized.columns
+    finally:
+        cache.release_all()
+
+
+def test_pipeline_outputs_survive_the_benchmark_teardown(full_run):
+    """The benchmark unpersists ``qc_meth`` and ``normalized``, then
+    releases every tracked persist. The cut blocks are not cache-manager
+    entries, so both outputs still collect, to the same values."""
+    from methyl_data_pipeline_spark import cache
+
+    def values(df, keys):
+        return df.toPandas().sort_values(keys).reset_index(drop=True)
+
+    norm_keys, dmp_keys = ["probe_id", "sample_id"], ["probe_id"]
+    before = values(full_run.normalized, norm_keys), values(full_run.dmp, dmp_keys)
+    full_run.qc_meth.unpersist()
+    full_run.normalized.unpersist()
+    cache.release_all()
+    after = values(full_run.normalized, norm_keys), values(full_run.dmp, dmp_keys)
+    for b, a in zip(before, after):
+        pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
