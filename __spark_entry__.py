@@ -3222,13 +3222,10 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     target = docs.filter((F.col("lang") == "en") & (F.col("doc_id") % 7 == 0))
     raw = docs.filter(F.col("doc_id") % 7 != 0)
-    # stage=False (VERDICT r14 #7 — the r14 stage=True opt-in measured
-    # SLOWER on the driver, 2.63 -> 3.40 s, and the r15 interleaved
-    # quiet-session A/B confirmed it in all 4 pairs: lazy 2.45-3.48 s
-    # vs staged 3.26-4.06 s at sf0.1. The staged persist's fill
-    # barrier costs more wall than the second raw-corpus pass it
-    # saves at bench scale; the operator keeps the opt-in for cluster
-    # callers where the raw re-scan dominates.)
+    # dsir_weights scans the raw corpus twice; persisting the collapsed
+    # bucket frame between the passes measured SLOWER in local mode
+    # (2.63 -> 3.40 s, and 4 of 4 interleaved pairs at sf0.1) and was
+    # removed — the measurements are in dsir_weights' docstring.
     out = dsir_select(
         raw,
         target,

@@ -10,12 +10,14 @@ Layout
 ------
 - ``session``    SparkSession builder (Arrow on, AQE on)
 - ``model``      canonical long-form schema + wide⇄long converters
-- ``io``         sources & sinks (CSV/Excel/FinalReport/parquet/IDAT decoder)
-- ``operators``  relational + QC operators (filters, joins, set ops, top-k)
+- ``cache``      tracked persists and eager lineage cuts
+- ``io``         sources & sinks (CSV/Excel/FinalReport/JSONL/parquet, IDAT decoder)
+- ``operators``  relational + QC operators (filters, joins, top-k, contract reports)
 - ``functions``  scalar expression helpers (M-value, clamp, normalization)
-- ``stats``      BH-FDR, limma-style moderated t, ComBat, BMIQ, PCA
+- ``stats``      BH-FDR, limma-style moderated t/F, ComBat, BMIQ, PCA
 - ``ext``        dedup / similarity / text-analysis / multimodal
-- ``streaming``  Structured Streaming over event tables
+- ``streaming``  Structured Streaming over event tables (``events``; no
+                 stateful operators)
 - ``plans``      end-to-end pipeline assembly (the workflow.R equivalent)
 
 Every operator is a pure ``DataFrame -> DataFrame`` function: no

@@ -13,6 +13,8 @@ not be re-planned per reference is cut instead (:func:`cut`).
 
 from __future__ import annotations
 
+import gc
+
 from pyspark.sql import DataFrame
 
 # Strong refs, cleared by release_all: the JVM-side cache outlives the
@@ -46,9 +48,10 @@ def cut(df: DataFrame, reliable: bool = False) -> DataFrame:
 
 
 def release_all(blocking: bool = False) -> int:
-    """Unpersist every tracked DataFrame; returns how many were
-    released. Safe to call repeatedly — unpersist on a non-cached frame
-    is a no-op."""
+    """Unpersist every tracked DataFrame, then hand the JVM the handles
+    Python has dropped (:func:`_send_dropped_handles`); returns how many
+    frames were unpersisted. Safe to call repeatedly — unpersist on a
+    non-cached frame is a no-op."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()
@@ -57,4 +60,41 @@ def release_all(blocking: bool = False) -> int:
             n += 1
         except Exception:
             pass  # session already stopped — nothing to release
+    _send_dropped_handles()
     return n
+
+
+def _send_dropped_handles() -> None:
+    """Release on the JVM, from this thread, every object whose Python
+    handle is gone.
+
+    A dropped DataFrame's handle often sits in a reference cycle (py4j
+    caches a JavaMember on its JavaObject, and the member points back),
+    so only the cycle collector frees it; 50-70 of a methyl run's
+    handles are freed that way, in about 0.07 s. py4j then queues their
+    releases for a finalizer thread that sleeps a second whenever its
+    queue is empty, so a run's last DataFrames stay pinned on the JVM,
+    with their checkpoint blocks and broadcast hash relations (one 64 MB
+    page each at the default page size), for up to a second after the
+    run. Whether a following GC sees them as garbage then depends on
+    that thread's phase: on the methyl_dmp benchmark the heap read after
+    the run settled at 79 MB in most runs and at 221-292 MB in about one
+    run in four. Sent here, they are released when this returns (about
+    100 handles per methyl run)."""
+    from pyspark import SparkContext
+
+    gc.collect()
+    client = getattr(SparkContext._gateway, "_gateway_client", None)
+    pending = getattr(client, "finalizer_deque", None)
+    if pending is None:  # no gateway, or py4j releases synchronously
+        return
+    while True:
+        try:
+            task = pending.pop()
+        except IndexError:
+            return
+        if not isinstance(task, tuple):  # the worker's shutdown marker
+            pending.append(task)
+            return
+        java_client, target_id = task
+        java_client.garbage_collect_object(target_id, enqueue=False)

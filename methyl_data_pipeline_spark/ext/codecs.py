@@ -73,17 +73,6 @@ def decode_bmp(raw: bytes) -> tuple[int, int, bytes]:
     return width, height, rgb.tobytes()
 
 
-def resize_nearest(
-    rgb: bytes, width: int, height: int, out_w: int, out_h: int
-) -> bytes:
-    """Nearest-neighbor resize of a top-down RGB buffer (the resize a
-    real pipeline does post-decode, minus the codec dependency)."""
-    img = np.frombuffer(rgb, dtype=np.uint8).reshape(height, width, 3)
-    yi = (np.arange(out_h) * height // out_h).clip(0, height - 1)
-    xi = (np.arange(out_w) * width // out_w).clip(0, width - 1)
-    return img[yi][:, xi].tobytes()
-
-
 # ---------------------------------------------------------------------------
 # WAV — RIFF/WAVE with PCM 8/16-bit fmt + data chunks
 # ---------------------------------------------------------------------------
@@ -144,16 +133,6 @@ def decode_wav(raw: bytes) -> tuple[int, "np.ndarray"]:
     if channels > 1:
         x = x[: len(x) // channels * channels].reshape(-1, channels).mean(axis=1)
     return sample_rate, x
-
-
-def resample_nearest(x: "np.ndarray", src_rate: int, dst_rate: int) -> "np.ndarray":
-    """Nearest-index resample (sufficient for feature plumbing; a real
-    pipeline would substitute polyphase filtering here)."""
-    if src_rate == dst_rate:
-        return x
-    n_out = int(round(len(x) * dst_rate / src_rate))
-    idx = (np.arange(n_out) * src_rate // dst_rate).clip(0, len(x) - 1)
-    return x[idx]
 
 
 # ---------------------------------------------------------------------------

@@ -10,11 +10,9 @@ image/audio library needs.
 Codecs: BMP images and PCM WAV audio decode for REAL via the
 pure-struct parsers in ``ext/codecs.py`` (no library needed — same
 approach as the IDAT reader). Formats that genuinely require a codec
-library (JPEG/PNG, MP3/AAC, video containers) fall back to a
-deterministic md5-derived fake with the exact output schema, sizes,
-and 1:N batch shapes a real codec produces, keeping the Spark-side
-plumbing testable end-to-end; each marks its plug-in point behind
-``use_real_codec`` + an import-try.
+library (JPEG/PNG, MP3/AAC) fall back to deterministic md5-derived
+features with the exact output schema a real codec produces, keeping
+the Spark-side plumbing testable end-to-end.
 """
 
 from __future__ import annotations
@@ -214,143 +212,6 @@ def synthesize_media(
     )
 
 
-def _digest_bytes(raw: bytes, n: int, salt: bytes = b"") -> bytes:
-    """Deterministic pseudo-bytes: md5 in counter mode. Stands in for
-    decoded pixel/sample data so shapes and sizes are real."""
-    out = bytearray()
-    counter = 0
-    while len(out) < n:
-        out += hashlib.md5(salt + raw[:64] + counter.to_bytes(4, "big")).digest()
-        counter += 1
-    return bytes(out[:n])
-
-
-def decode_image(
-    media: DataFrame, width: int = 32, height: int = 32, use_real_codec: bool = False
-) -> DataFrame:
-    """Image decode + resize as Arrow-batched ``mapInPandas``: one row
-    in → one row out with an RGB pixel buffer of exactly
-    ``width*height*3`` bytes plus shape metadata.
-
-    BMP payloads (magic ``BM``) decode for real — pure-struct parser in
-    ``ext/codecs.py``, then a nearest-neighbor resize to the target
-    shape; ``mode`` reports ``"RGB"``. Other formats fall back to the
-    deterministic fake stream (``mode="FAKE"``) unless
-    ``use_real_codec=True``, which marks the PIL plug-in point for
-    codec-dependent formats (JPEG/PNG/WebP)."""
-    if use_real_codec:
-        try:
-            import PIL  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "JPEG/PNG decode needs PIL/opencv (not in this container); "
-                "BMP decodes without it"
-            ) from e
-        raise NotImplementedError("wire PIL decode here when the image lib lands")
-
-    out_schema = "id long, width int, height int, mode string, pixels binary"
-    n_px = width * height * 3
-
-    def decode(batches):
-        from methyl_data_pipeline_spark.ext.codecs import decode_bmp, resize_nearest
-
-        for pdf in batches:
-            rows = {"id": [], "width": [], "height": [], "mode": [], "pixels": []}
-            for rid, content in zip(pdf["id"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                pixels, mode = None, "FAKE"
-                if raw[:2] == b"BM":
-                    # magic match is not validity: a corrupt/truncated
-                    # BMP must fall back like every other non-decodable
-                    # payload, not kill the job
-                    try:
-                        src_w, src_h, rgb = decode_bmp(raw)
-                        pixels = resize_nearest(rgb, src_w, src_h, width, height)
-                        mode = "RGB"
-                    except ValueError:
-                        pixels = None
-                if pixels is None:
-                    pixels = _digest_bytes(raw, n_px, b"img|")
-                rows["id"].append(rid)
-                rows["width"].append(width)
-                rows["height"].append(height)
-                rows["mode"].append(mode)
-                rows["pixels"].append(pixels)
-            yield pd.DataFrame(rows)
-
-    from methyl_data_pipeline_spark.deploy import ensure_importable
-
-    ensure_importable(media.sparkSession)
-    return media.mapInPandas(decode, out_schema)
-
-
-def decode_audio(
-    media: DataFrame,
-    sample_rate: int = 16_000,
-    clip_seconds: float = 1.0,
-    use_real_codec: bool = False,
-) -> DataFrame:
-    """Audio decode/resample via ``mapInPandas``: one row per clip with
-    a float waveform of ``sample_rate * clip_seconds`` samples in
-    [-1, 1].
-
-    PCM WAV payloads (RIFF magic) decode for real — struct-parsed RIFF
-    chunks (``ext/codecs.py``), channel downmix, nearest-index resample
-    to the target rate, pad/trim to the clip length. Other containers
-    fall back to the fake stream; ``use_real_codec=True`` marks the
-    ffmpeg/soundfile plug-in point for compressed audio (MP3/AAC/OGG).
-    """
-    if use_real_codec:
-        try:
-            import soundfile  # noqa: F401
-        except ImportError as e:
-            raise NotImplementedError(
-                "compressed audio needs soundfile/ffmpeg (not in this "
-                "container); PCM WAV decodes without it"
-            ) from e
-        raise NotImplementedError("wire soundfile decode here when the audio lib lands")
-
-    out_schema = "id long, sample_rate int, n_samples int, waveform array<float>"
-    n_samples = int(sample_rate * clip_seconds)
-
-    def decode(batches):
-        import numpy as np
-
-        from methyl_data_pipeline_spark.ext.codecs import decode_wav, resample_nearest
-
-        for pdf in batches:
-            rows = {"id": [], "sample_rate": [], "n_samples": [], "waveform": []}
-            for rid, content in zip(pdf["id"], pdf["content"]):
-                raw = bytes(content) if content is not None else b""
-                waveform = None
-                if raw[:4] == b"RIFF":
-                    # RIFF magic also matches AVI (and corrupt WAVs) —
-                    # fall back instead of failing the task
-                    try:
-                        src_rate, wave = decode_wav(raw)
-                        wave = resample_nearest(wave, src_rate, sample_rate)
-                        if len(wave) < n_samples:
-                            wave = np.pad(wave, (0, n_samples - len(wave)))
-                        waveform = wave[:n_samples].astype(float).tolist()
-                    except ValueError:
-                        waveform = None
-                if waveform is None:
-                    pcm = _digest_bytes(raw, n_samples, b"aud|")
-                    waveform = (
-                        np.frombuffer(pcm, dtype=np.uint8) / 127.5 - 1.0
-                    ).tolist()
-                rows["id"].append(rid)
-                rows["sample_rate"].append(sample_rate)
-                rows["n_samples"].append(n_samples)
-                rows["waveform"].append(waveform)
-            yield pd.DataFrame(rows)
-
-    from methyl_data_pipeline_spark.deploy import ensure_importable
-
-    ensure_importable(media.sparkSession)
-    return media.mapInPandas(decode, out_schema)
-
-
 def frame_sample(
     media: DataFrame, every_n: int = 10, assumed_fps: float = 30.0
 ) -> DataFrame:
@@ -541,7 +402,7 @@ def image_ahash(media: DataFrame, grid: int = 8) -> DataFrame:
     """Perceptual average-hash fingerprint over BMP payloads: decode
     (real struct parser), integer grayscale ``(r+g+b)//3``,
     nearest-neighbor downsample to a ``grid x grid`` sample (the same
-    ``i*dim//grid`` index map as ``codecs.resize_nearest`` — so the
+    ``i*dim//grid`` index map a nearest-neighbor resize uses — so the
     hash is resolution-invariant for block-constant images), then
     threshold each sample at the grid mean and pack row-major into a
     signed 64-bit int (bit ``k = i*grid + j``; bit set iff

@@ -1360,7 +1360,6 @@ def bm25_rank(
     b: float = 0.75,
     top_k: int = 10,
     score_round: int = 6,
-    materialize_index: bool = False,
 ) -> DataFrame:
     """BM25 ranked retrieval: for each query, the ``top_k`` corpus
     documents by the Okapi BM25 score (Robertson/Sparck Jones; the
@@ -1372,8 +1371,7 @@ def bm25_rank(
     Plan shape at 100 TB — an inverted-index join, never a cartesian:
     one explode + (doc, term) groupBy builds the postings; its three
     consumers re-run that build lazily (Catalyst shares no subplan
-    across branches) unless ``materialize_index=True`` persists the
-    index once — see the measurement note at the build site. Query
+    across branches) — see the measurement note at the build site. Query
     terms and their document frequencies are query-vocabulary-sized
     and BROADCAST, so scoring touches only postings of query terms;
     the final (query, doc) partial-sum agg and per-query top-k window
@@ -1395,16 +1393,11 @@ def bm25_rank(
     )
     # The postings frame has three consumers (doc lengths, query-term
     # document frequencies, the candidate join); lazily each re-runs
-    # the fact explode + shuffle. ``materialize_index=True`` persists
-    # the inverted index so the fact passes once — measured 2x SLOWER
-    # at sf0.1 (3.0s vs 1.6s: the index write dominates a small
-    # corpus) but the winning shape once the corpus dwarfs the index
-    # build, or when many query batches reuse one index. Per-call-site
-    # measurement over assumption (the bloom_test lesson).
-    if materialize_index:
-        from methyl_data_pipeline_spark import cache
-
-        postings = cache.track(postings)
+    # the fact explode + shuffle. Persisting the inverted index so the
+    # fact passes once was measured 2x SLOWER at sf0.1 (3.0 s vs
+    # 1.6 s: the index write dominates a small corpus) and removed. It
+    # may win once the corpus dwarfs the index build, or when many
+    # query batches reuse one index; re-measure before adding it back.
     doclen = postings.groupBy(id_col).agg(F.sum("_tf").alias("_dl"))
     corpus_stats = doclen.agg(
         F.count(F.lit(1)).alias("_n_docs"), F.avg("_dl").alias("_avgdl")
@@ -2065,7 +2058,6 @@ def dsir_weights(
     buckets: int = 4096,
     smoothing: float = 1.0,
     ratio_round: int = 9,
-    stage: bool = False,
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every raw doc
@@ -2085,21 +2077,19 @@ def dsir_weights(
     before their one shuffle (same shape as ``domain_mix``); the
     log-ratio table is ``buckets`` rows and BROADCAST into the per-doc
     scoring join; the per-doc sum is one (id, bucket)-granular
-    aggregation. By default the raw corpus is scanned twice (once for
-    q, once for scoring) — Catalyst shares no subplan across branches,
-    and the B-row distribution is the thing worth keeping, not the
-    gram stream. ``stage=True`` persists the collapsed (id, bucket,
-    count) frame between the two passes instead — far smaller than the
-    token stream but still corpus-row-scaled. The measurements
-    disagree by setting: a local[32] A/B (medians of 3) had staging
-    win (sf0.1, 4,285 docs: 3.22 s two-scan vs 3.02 s staged; 10x
-    corpus: 6.57 vs 4.94 s), but a later interleaved A/B on a local
-    driver at sf0.1 had it lose every pair (lazy 2.45-3.48 s vs staged
-    3.26-4.06 s): the persist's fill barrier costs more than the second
-    pass it saves. So it stays off by default. Turn it on only when
-    re-reading the raw source dominates (remote object store,
-    decompress-heavy codec, cluster scale); the persisted frame is
-    ~n_docs x distinct-buckets rows and may spill.
+    aggregation. The raw corpus is scanned twice (once for q, once for
+    scoring) — Catalyst shares no subplan across branches, and the
+    B-row distribution is the thing worth keeping, not the gram stream.
+    Persisting the collapsed (id, bucket, count) frame between the two
+    passes was measured and removed: a local[32] A/B (medians of 3) had
+    it win (sf0.1, 4,285 docs: 3.22 s two-scan vs 3.02 s persisted;
+    10x corpus: 6.57 vs 4.94 s), but an interleaved A/B in local mode
+    at sf0.1 had it lose all 4 pairs (two-scan 2.45-3.48 s vs
+    persisted 3.26-4.06 s): the persist's fill barrier costs more than
+    the second pass it saves. Re-measure before adding it back, e.g.
+    where re-reading the raw source dominates (remote object store,
+    decompress-heavy codec); the persisted frame is ~n_docs x
+    distinct-buckets rows and may spill.
 
     Returns (id_col, n_grams, log_weight) for every raw doc with
     non-NULL text; a doc with no grams (empty text) carries weight 0.
@@ -2118,11 +2108,6 @@ def dsir_weights(
         return db.groupBy("_b").agg(F.sum("_c").alias(f"n_{tag}"))
 
     raw_buckets = doc_buckets(raw)
-    if stage:
-        from methyl_data_pipeline_spark import cache
-
-        raw_buckets = cache.track(raw_buckets)
-
     dist = bucket_dist(doc_buckets(target), "p").join(
         bucket_dist(raw_buckets, "q"), "_b", "full"
     )
@@ -2173,7 +2158,6 @@ def dsir_select(
     temperature: float = 1.0,
     seed: str = "dsir",
     score_round: int = 6,
-    stage: bool = False,
 ) -> DataFrame:
     """DSIR selection via deterministic Gumbel top-k: keep the ``k``
     raw docs with the largest ``log_weight / temperature + Gumbel``
@@ -2189,18 +2173,13 @@ def dsir_select(
     docs, sel_rank 1..k by descending key. The top-k runs as
     ``TakeOrderedAndProject`` (orderBy + limit — per-partition heaps,
     no single-task corpus funnel); only the k survivors pass through
-    the rank window. ``stage`` passes through to
-    :func:`dsir_weights` (persist the collapsed raw feature frame
-    between its two passes — slower on a local driver, worth it only
-    when the raw re-scan dominates; see that docstring).
+    the rank window.
     """
     if k < 1:
         raise ValueError("dsir_select: k must be >= 1")
     if temperature <= 0:
         raise ValueError("dsir_select: temperature must be > 0")
-    w = dsir_weights(
-        raw, target, text_col, id_col, buckets, smoothing, stage=stage
-    )
+    w = dsir_weights(raw, target, text_col, id_col, buckets, smoothing)
     m = 1 << 20
     u = (
         F.pmod(md5_long(F.col(id_col).cast("string"), salt=seed), F.lit(m))

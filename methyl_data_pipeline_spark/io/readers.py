@@ -191,12 +191,6 @@ def read_jsonl(
     return r.option("multiLine", multiline).json(path)
 
 
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC source (engine-native): same pushdown/pruning contract as
-    the parquet scan — filters and projections reach the reader."""
-    return spark.read.orc(path)
-
-
 def stage_idat_tree(
     source_dir: str,
     staging_dir: str,

@@ -35,30 +35,3 @@ def write_excel(df: DataFrame, path: str, max_rows: int = 1_000_000) -> None:
         from methyl_data_pipeline_spark.io.xlsx import write_xlsx
 
         write_xlsx(pdf, path)
-
-
-def write_orc(
-    df: DataFrame, path: str, mode: str = "overwrite",
-    partition_cols: list[str] | None = None,
-) -> None:
-    """ORC sink (engine-native; columnar alternative to parquet for
-    Hive-ecosystem consumers — predicate pushdown, column pruning, and
-    zlib/zstd compression all work the same way)."""
-    w = df.write.mode(mode)
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.orc(path)
-
-
-def write_jsonl(
-    df: DataFrame, path: str, mode: str = "overwrite",
-    compression: str | None = None,
-) -> None:
-    """JSON-lines sink — the interchange format of LLM corpus tooling
-    (one document object per line). Spark's json writer IS jsonl; a
-    distributed write produces one .jsonl part per task, optionally
-    gzip/zstd-compressed."""
-    w = df.write.mode(mode)
-    if compression:
-        w = w.option("compression", compression)
-    w.json(path)

@@ -6,9 +6,7 @@ alignment (plots.R:16-18), and marker/header presence
 (data_parsing.py:18-19).
 
 Design: every contract is evaluated in ONE aggregate pass — a single
-``agg`` of conditional counts, never one scan per predicate — and the
-raising wrapper returns the input DataFrame unchanged so checks chain
-inside a pipeline: ``df = contracts.check(df, {...})``. Violation
+``agg`` of conditional counts, never one scan per predicate. Violation
 counting is null-strict: a NULL predicate result counts as a VIOLATION
 (the reference's ``stopifnot`` treats NA as failure), implemented by
 counting rows where the predicate is not TRUE.
@@ -17,11 +15,6 @@ counting rows where the predicate is not TRUE.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
-
-
-class ContractViolation(RuntimeError):
-    """Raised when a data contract fails; message carries per-predicate
-    violation counts."""
 
 
 def check_report(df: DataFrame, predicates: dict[str, Column]) -> DataFrame:
@@ -33,65 +26,3 @@ def check_report(df: DataFrame, predicates: dict[str, Column]) -> DataFrame:
         for name, p in predicates.items()
     ]
     return df.agg(*aggs)
-
-
-def check(
-    df: DataFrame, predicates: dict[str, Column], name: str = "contract"
-) -> DataFrame:
-    """Evaluate ``predicates`` (one agg action); raise
-    :class:`ContractViolation` listing every failed predicate's count,
-    else return ``df`` unchanged for chaining."""
-    row = check_report(df, predicates).collect()[0]
-    bad = {k: row[k] for k in predicates if row[k]}
-    if bad:
-        detail = ", ".join(f"{k}: {v} rows" for k, v in sorted(bad.items()))
-        raise ContractViolation(f"{name} violated — {detail}")
-    return df
-
-
-def expect_complete_matrix(
-    meth: DataFrame,
-    n_samples: int,
-    value_col: str = "beta",
-    key_col: str = "probe_id",
-    sample_col: str = "sample_id",
-) -> DataFrame:
-    """ComBat/BMIQ precondition (combat_norm.py:36-37, workflow.R:119-126):
-    every probe observed non-null in every sample. Long-form semantics —
-    count-vs-expected per probe, not a null scan (SURVEY §7.3 #3).
-    Raises on the first incomplete probe set; returns ``meth``."""
-    # distinct SAMPLES with a non-null value — a plain row count would
-    # let duplicate (probe, sample) rows mask a missing sample
-    per = meth.groupBy(key_col).agg(
-        F.countDistinct(
-            F.when(F.col(value_col).isNotNull(), F.col(sample_col))
-        ).alias("_n")
-    )
-    row = per.agg(
-        F.sum(F.when(F.col("_n") != n_samples, 1).otherwise(0)).alias("bad")
-    ).collect()[0]
-    if row["bad"]:
-        raise ContractViolation(
-            f"complete-matrix violated — {row['bad']} probes not observed "
-            f"in all {n_samples} samples"
-        )
-    return meth
-
-
-def expect_aligned_samples(
-    meth: DataFrame, samples: DataFrame, key: str = "sample_id"
-) -> DataFrame:
-    """The reference's ``stopifnot(identical(colnames, targets$ID))``
-    (workflow.R:39): the fact table's sample set and the sample sheet
-    must match EXACTLY — anti-joins empty in both directions. One
-    action over two dimension-sized distincts; returns ``meth``."""
-    m = meth.select(key).distinct()
-    s = samples.select(key).distinct()
-    only_m = m.join(s, key, "left_anti").count()
-    only_s = s.join(m, key, "left_anti").count()
-    if only_m or only_s:
-        raise ContractViolation(
-            f"sample alignment violated — {only_m} in matrix only, "
-            f"{only_s} in sheet only"
-        )
-    return meth

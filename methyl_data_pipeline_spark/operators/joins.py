@@ -32,30 +32,6 @@ def combine_runs_long(run_dfs: list[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), run_dfs)
 
 
-def intersect_probes_inner(run_dfs: list[DataFrame], key: str = "probe_id") -> DataFrame:
-    """Keep only probes present in every run (the reference's
-    ``Reduce(intersect, rownames)`` + cbind, J2/T2: workflow.R:78-79).
-
-    Long form: union all, then semi-join on probes whose distinct source
-    count equals the run count.
-    """
-    from methyl_data_pipeline_spark import cache
-
-    n = len(run_dfs)
-    tagged = [df.withColumn("_src", F.lit(i)) for i, df in enumerate(run_dfs)]
-    # persisted: the union lineage feeds BOTH the completeness
-    # aggregate and the semi-join's left side — without it every run's
-    # upstream (possibly an ingest parse) executes twice per action
-    unioned = cache.track(reduce(lambda a, b: a.unionByName(b), tagged))
-    complete = (
-        unioned.groupBy(key)
-        .agg(F.countDistinct("_src").alias("_n_src"))
-        .filter(F.col("_n_src") == n)
-        .select(key)
-    )
-    return unioned.drop("_src").join(complete, key, "left_semi")
-
-
 def enrich_with_samples(
     fact: DataFrame, samples: DataFrame, key: str = "sample_id", how: str = "left"
 ) -> DataFrame:
@@ -69,13 +45,6 @@ def enrich_with_samples(
     overlap = [c for c in samples.columns if c != key and c in fact.columns]
     dim = samples.drop(*overlap) if overlap else samples
     return fact.join(F.broadcast(dim), key, how)
-
-
-def enrich_with_probes(fact: DataFrame, probes: DataFrame, how: str = "inner") -> DataFrame:
-    """Broadcast probe-annotation join (design type, chr). Reference J7
-    (bmiq/DoBMIQ.R:46-54). The probes dimension is ~3e5 rows — well
-    under broadcast threshold even with generous schemas."""
-    return fact.join(F.broadcast(probes), "probe_id", how)
 
 
 def rename_samples_by_lookup(

@@ -257,21 +257,6 @@ def health_report(meth: DataFrame, value_col: str = "beta") -> DataFrame:
     )
 
 
-def scrub_nonfinite(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Replace NaN/±Inf with NULL in the given columns, then drop rows
-    that became all-null on those columns. Reference P15
-    (workflow.R:136-137, plots.R:113-120)."""
-    out = df
-    for c in cols:
-        out = out.withColumn(
-            c,
-            F.when(F.isnan(F.col(c)) | (F.abs(F.col(c)) == float("inf")), None).otherwise(
-                F.col(c)
-            ),
-        )
-    return out.na.drop("all", subset=cols)
-
-
 def sample_correlation(
     meth: DataFrame,
     value_col: str = "beta",

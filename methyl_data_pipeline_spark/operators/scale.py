@@ -111,16 +111,6 @@ def skew_report(
     )
 
 
-def salted_mean(
-    df: DataFrame, key_cols: list[str], value_col: str, salt_buckets: int = 16
-) -> DataFrame:
-    """Skew-safe mean via salted sum/count."""
-    agg = salted_aggregate(df, key_cols, [value_col], count=True, salt_buckets=salt_buckets)
-    return agg.select(
-        *key_cols, (F.col(f"sum_{value_col}") / F.col("n")).alias(f"mean_{value_col}")
-    )
-
-
 def write_bucketed(
     df: DataFrame,
     table_name: str,

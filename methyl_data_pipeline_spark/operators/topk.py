@@ -36,31 +36,3 @@ def top_k_per_group(
         df.withColumn(rank_name, F.row_number().over(w))
         .filter(F.col(rank_name) <= k)
     )
-
-
-def approx_quantiles_per_group(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str],
-    probabilities: list[float] = (0.25, 0.5, 0.75),
-    relative_error: float = 1e-4,
-) -> DataFrame:
-    """Approximate per-group quantiles via Spark's Greenwald–Khanna
-    sketch (``approx_percentile``) — the 100-TB companion to the exact
-    ``percentile`` aggregate: the exact form buffers every group value
-    on one reducer; the sketch is fixed-size (O(1/relative_error)
-    per group), merges associatively in partial aggregation, and
-    guarantees rank error <= relative_error * n.
-    """
-    probs = ", ".join(str(p) for p in probabilities)
-    agg_expr = F.expr(
-        f"approx_percentile({value_col}, array({probs}), {int(1 / relative_error)})"
-    ).alias("_qs")
-    out = df.groupBy(*group_cols).agg(agg_expr)
-    names = [f"q{round(p * 100)}" if round(p * 100) == p * 100
-             else f"q{str(p).replace('0.', '')}" for p in probabilities]
-    if len(set(names)) != len(names):
-        raise ValueError(f"probabilities map to colliding column names: {names}")
-    for i, name in enumerate(names):
-        out = out.withColumn(name, F.col("_qs")[i])
-    return out.drop("_qs")

@@ -61,7 +61,9 @@ def run_methylation_pipeline(
 ) -> PipelineResult:
     """Compose the full reference pipeline over a long meth table.
 
-    ``dmp_groups`` selects the DMP stage (requires ``samples``):
+    ``dmp_groups`` selects the DMP stage. Its group column is read from
+    the normalized matrix when it is already there (e.g. ``run``), else
+    joined from ``samples``; if neither carries it, ``ValueError``.
 
     - ``(group_col, a, b)`` — limma moderated t between the two groups
       (plots.R:71-176, the reference's pairwise DMP).
@@ -72,7 +74,15 @@ def run_methylation_pipeline(
       (Mouse_Microarray_General_Workflow.R:125-143).
 
     Either way the stage ends in BH step-up over the moderated p-value.
+    Naming exactly one level raises ``ValueError`` before any Spark job:
+    every probe would fail the two-group minimum and ``dmp`` would come
+    back empty.
     """
+    if dmp_groups is not None and len(dmp_groups) == 2:
+        raise ValueError(
+            f"dmp_groups={dmp_groups!r} names a single level of "
+            f"{dmp_groups[0]!r}; name two or more, or the column alone"
+        )
     # --- QC stage (workflow.R:43-75): sample filter -> probe filters.
     # One bounded action over the per-sample agg (map-side partial, no
     # fact shuffle) yields both the retained ids and their count; the
@@ -133,13 +143,18 @@ def run_methylation_pipeline(
     # --- DMP stage (plots.R:71-176; omnibus F per
     # Mouse_Microarray_General_Workflow.R:125-143).
     dmp = None
-    if dmp_groups is not None and samples is not None:
+    if dmp_groups is not None:
         group_col, *groups = dmp_groups
         if group_col in normalized.columns:
             labeled = normalized
-        else:
+        elif samples is not None and group_col in samples.columns:
             labeled = normalized.join(
                 F.broadcast(samples.select("sample_id", group_col)), "sample_id"
+            )
+        else:
+            raise ValueError(
+                f"dmp_groups: group column {group_col!r} is neither on the "
+                "normalized matrix nor in samples"
             )
         labeled = labeled.withColumn("mval", model.mvalue(value_col))
         if len(groups) == 2:

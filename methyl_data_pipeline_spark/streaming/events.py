@@ -248,35 +248,6 @@ def stream_events_from_parquet(
     return reader.load(src)
 
 
-def stream_dedup(
-    stream: DataFrame,
-    key_cols: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Streaming exact dedup with bounded state:
-    ``dropDuplicatesWithinWatermark`` keyed on ``key_cols``, state
-    expired as the event-time watermark advances — a duplicate arriving
-    later than the watermark lag is not caught, which is the standard
-    state/recall trade (without the watermark the key-set state grows
-    without bound at 100-TB stream volumes).
-
-    ``dropDuplicatesWithinWatermark``, not plain ``dropDuplicates``:
-    with the event-time column absent from the dedup subset, plain
-    dropDuplicates never evicts its state even under a watermark — the
-    within-watermark variant is the form whose state the watermark
-    actually bounds.
-
-    The batch twin is ``ext.dedup.dedup_exact``; this is the
-    Structured Streaming path for continuous ingest.
-    """
-    if key_cols is None:
-        key_cols = ["event_id"]
-    return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-
-
 def stream_quality_gate(
     stream: DataFrame,
     text_col: str = "text",
@@ -333,23 +304,6 @@ def stream_stream_join(
         f" AND r.{ts_col} <= l.{ts_col}"
     )
     return lw.join(rw, cond, how)
-
-
-def stream_enrich(
-    stream: DataFrame,
-    dimension: DataFrame,
-    on: str = "user_id",
-    how: str = "left",
-) -> DataFrame:
-    """Stream-static join: enrich a stream with a (small) dimension
-    table. The static side broadcasts — each micro-batch is a map-side
-    hash join, no stateful shuffle, no watermark needed (static side is
-    re-read per batch, so slowly-changing dimensions pick up updates).
-    The batch twin is ``operators.joins.enrich_with_samples``.
-    """
-    from pyspark.sql import functions as F
-
-    return stream.join(F.broadcast(dimension), on, how)
 
 
 def stream_curate(
@@ -525,46 +479,3 @@ def curate_batch_twin(
             F.size(F.col("_ws")).cast("long").alias("n_tokens"),
         )
     )
-
-
-def start_curated_ingest(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    bloom_words: list[int] | None = None,
-    schema=None,
-    available_now: bool = True,
-    **curate_kwargs,
-):
-    """Operational entry point for rolling corpus ingest: file-source
-    stream → :func:`stream_curate` → parquet sink, with EXACTLY-ONCE
-    semantics from the checkpoint. The checkpoint carries both the
-    source offsets (which files have been ingested) and the dedup
-    operator state, so a crash or planned restart resumes where it
-    left off — already-ingested files are never re-emitted, and a
-    duplicate arriving after a restart is still dropped because the
-    fingerprint state is restored, not rebuilt.
-
-    ``available_now=True`` (default) makes the same job the
-    INCREMENTAL BATCH formulation: each invocation drains files that
-    arrived since the last run, then terminates — the
-    checkpoint-driven twin of ``ext.dedup.incremental_dedup``'s
-    ledger, with the ledger managed by the engine. Pass ``False`` for
-    a long-running continuous query (production points the source at
-    Kafka instead of a directory).
-
-    Returns the started ``StreamingQuery``; callers own
-    ``awaitTermination``/``stop``.
-    """
-    stream = stream_events_from_parquet(spark, source_dir, schema=schema)
-    out = stream_curate(stream, bloom_words=bloom_words, **curate_kwargs)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", sink_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,6 +1,10 @@
-"""Shared Spark session + FIXTURES.md-style synthetic methylation data."""
+"""Shared Spark session, FIXTURES.md-style synthetic methylation data,
+and the plan-capture helper plan-shape tests assert on."""
 
 from __future__ import annotations
+
+import contextlib
+import io
 
 import numpy as np
 import pandas as pd
@@ -9,6 +13,15 @@ import pytest
 from methyl_data_pipeline_spark.session import get_session
 
 SF_DIR = "/root/testdata/sf0.001"
+
+
+def explain(df, mode: str = "simple") -> str:
+    """What ``df.explain(mode)`` prints, as a string — the public plan
+    API, so plan-shape tests never reach into ``df._jdf``."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode=mode)
+    return buf.getvalue()
 
 
 @pytest.fixture(scope="session")

@@ -6,6 +6,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import explain
 from methyl_data_pipeline_spark.ext.dedup import (
     dedup_exact,
     minhash_candidate_pairs,
@@ -50,11 +51,12 @@ def test_dedup_exact_drops_null_text(spark):
     window winner must not elect one NULL doc as a 'family' (the SQL
     oracle's equi-join never matches a NULL key)."""
     df = spark.createDataFrame(
-        [(1, "same words"), (2, "same words"), (3, None), (4, None)],
+        [(1, "same words"), (2, "same words"), (3, None), (4, None),
+         (None, "a body only the null id carries")],
         "doc_id long, text string",
     )
-    kept = sorted(r.doc_id for r in dedup_exact(df).collect())
-    assert kept == [1]
+    kept = {r.doc_id for r in dedup_exact(df).collect()}
+    assert kept == {1, None}  # a NULL id still wins its own fingerprint
 
 
 def test_minhash_finds_near_dups(spark):
@@ -1102,7 +1104,7 @@ def test_bucket_pair_expand_mega_bucket_both_paths_identical(spark):
     with pytest.raises(ValueError, match="max_bucket"):
         bucket_pair_expand(df, ["bucket"], member, max_bucket=0)
     # the capped plan actually exercises the join path
-    assert "Join" in capped._jdf.queryExecution().executedPlan().toString()
+    assert "Join" in explain(capped)
 
 
 def test_bucket_pair_expand_duplicate_members_no_self_pairs(spark):
@@ -1421,12 +1423,7 @@ def test_multimodal_corrupt_payloads_fall_back(spark):
     fallback on every decode path instead of failing the job."""
     import pandas as pd
 
-    from methyl_data_pipeline_spark.ext.multimodal import (
-        decode_audio,
-        decode_features,
-        decode_image,
-        frame_sample,
-    )
+    from methyl_data_pipeline_spark.ext.multimodal import decode_features, frame_sample
 
     bad = [
         (1, "image", b"BM" + b"\x00" * 10, 12),            # truncated BMP
@@ -1439,10 +1436,6 @@ def test_multimodal_corrupt_payloads_fall_back(spark):
     )
     feats = decode_features(media).collect()
     assert len(feats) == 4 and all(r.kind == "digest" for r in feats)
-    imgs = decode_image(media, width=4, height=4).collect()
-    assert len(imgs) == 4 and all(r.mode == "FAKE" for r in imgs)
-    auds = decode_audio(media, sample_rate=100, clip_seconds=0.1).collect()
-    assert len(auds) == 4 and all(r.n_samples == 10 for r in auds)
     frames = frame_sample(media, every_n=2).collect()
     assert {r.id for r in frames} == {1, 2, 3, 4}  # fallback frames emitted
 
@@ -1524,7 +1517,7 @@ def test_bm25_rank_is_inverted_index_shaped(spark):
         F.col("doc_id").alias("query_id"), F.col("text").alias("query_text")
     )
     out = bm25_rank(docs.filter(F.col("doc_id") >= 10), queries)
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = explain(out)
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan
     # VERDICT r6 #4: only the query-vocabulary-sized frames carry
@@ -1536,7 +1529,8 @@ def test_bm25_rank_is_inverted_index_shaped(spark):
     # column name containing it would skew the raw count).
     import re
 
-    analyzed = out._jdf.queryExecution().analyzed().toString()
+    extended = explain(out, mode="extended")
+    analyzed = extended.split("== Analyzed Logical Plan ==")[1].split("== Optimized")[0]
     hints = re.findall(r"(?:Resolved|Unresolved)Hint [^\n]*BROADCAST", analyzed, re.I)
     assert len(hints) == 4, analyzed
 
@@ -2207,28 +2201,6 @@ def test_two_level_plan_deterministic_and_total(spark):
     assert a_coarse == b_coarse and a_owner == b_owner
     assert len(a_owner) == 32
     assert set(a_owner) <= set(range(len(a_coarse)))
-
-
-def test_dsir_weights_stage_parity(spark):
-    """stage=True (persisted gram collapse) must agree with the
-    default two-scan plan at the operator's 6-dp contract — persisting
-    reorders the per-doc float sum's partials, so exact-ulp equality
-    is not promised (the same reason every consumer rounds
-    log_weight)."""
-    from methyl_data_pipeline_spark import cache
-    from methyl_data_pipeline_spark.ext.text import dsir_weights
-
-    docs = _docs(spark)
-    target = docs.filter(F.col("doc_id") % 2 == 0)
-    raw = docs.filter(F.col("doc_id") % 2 == 1)
-
-    def rows(stage):
-        out = dsir_weights(raw, target, buckets=128, stage=stage).collect()
-        return sorted((r[0], r[1], round(r[2], 6)) for r in out)
-
-    a, b = rows(False), rows(True)
-    cache.release_all()
-    assert a == b and a
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import explain
 from methyl_data_pipeline_spark.io.readers import decode_idat, read_any, read_idat_dir
 
 
@@ -87,7 +88,7 @@ def test_plan_pushdown_regression(spark):
     """Filter + projection must reach the parquet scan (SURVEY §4.1)."""
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q = li.filter(F.col("l_shipdate") <= "1995-01-01").select("l_orderkey", "l_quantity")
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = explain(q)
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     assert "l_extendedprice" not in plan  # column pruning held
 
@@ -99,26 +100,25 @@ def test_plan_broadcast_regression(spark):
     q = li.join(F.broadcast(supp), li.l_suppkey == supp.s_suppkey).groupBy(
         "s_name"
     ).count()
-    plan = q._jdf.queryExecution().executedPlan().toString()
+    plan = explain(q)
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_jsonl_round_trip(spark, tmp_path):
-    """JSONL sink -> source round trip with explicit schema; files are
-    one-object-per-line (the LLM-corpus interchange shape)."""
+    """Spark's json writer -> read_jsonl round trip with explicit schema;
+    files are one-object-per-line (the LLM-corpus interchange shape)."""
     import glob as _glob
     import json as _json
 
     from methyl_data_pipeline_spark.io.readers import read_jsonl
-    from methyl_data_pipeline_spark.io.writers import write_jsonl
 
     df = spark.createDataFrame(
         [(1, "hello world", "src0"), (2, "second doc", "src1")],
         "doc_id long, text string, source string",
     )
     out = str(tmp_path / "docs_jsonl")
-    write_jsonl(df, out)
+    df.write.json(out)
     parts = [p for p in _glob.glob(out + "/part-*") if not p.endswith(".crc")]
     assert parts, "no jsonl part files written"
     # a 2-row frame over N partitions leaves most part files empty —
@@ -138,21 +138,19 @@ def test_jsonl_round_trip(spark, tmp_path):
 
 
 def test_orc_round_trip_with_pushdown(spark, tmp_path):
-    """ORC sink -> source round trip; a filter on the read must reach
-    the ORC scan as a pushed filter (same contract as parquet)."""
-    from methyl_data_pipeline_spark.io.readers import read_orc
-    from methyl_data_pipeline_spark.io.writers import write_orc
-
+    """ORC write -> read_any's ``.orc`` dispatch; a filter on the read
+    must reach the ORC scan as a pushed filter (same contract as
+    parquet)."""
     df = spark.createDataFrame(
         [(i, f"doc {i}", f"src{i % 3}") for i in range(30)],
         "doc_id long, text string, source string",
     )
-    out = str(tmp_path / "docs_orc")
-    write_orc(df, out, partition_cols=["source"])
-    back = read_orc(spark, out)
+    out = str(tmp_path / "docs.orc")
+    df.write.partitionBy("source").orc(out)
+    back = read_any(spark, out)
     assert back.count() == 30
     filtered = back.filter(F.col("doc_id") < 10).select("doc_id")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
+    plan = explain(filtered)
     assert "PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,10)" in plan
     assert filtered.count() == 10
     # partition pruning: source predicate prunes directories
@@ -181,12 +179,9 @@ def test_csv_sink_and_sanitize_filename(spark, tmp_path):
 
 
 def test_read_any_dispatches_jsonl(spark, tmp_path):
-    from methyl_data_pipeline_spark.io.readers import read_any
-    from methyl_data_pipeline_spark.io.writers import write_jsonl
-
     df = spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, text string")
     out = str(tmp_path / "docs.jsonl")
-    write_jsonl(df, out)
+    df.write.json(out)
     back = read_any(spark, out)
     assert back.count() == 2 and set(back.columns) == {"doc_id", "text"}
 

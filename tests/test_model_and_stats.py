@@ -499,6 +499,45 @@ def test_pipeline_dmp_multigroup_matches_numpy_anova(spark):
     )
 
 
+def test_pipeline_dmp_reads_group_column_from_normalized(spark, meth, probes):
+    """With no samples table, a group column already on the normalized
+    matrix (``run``) drives the DMP stage instead of skipping it."""
+    from methyl_data_pipeline_spark.plans.pipeline import run_methylation_pipeline
+
+    res = run_methylation_pipeline(
+        meth, probes, None, run_bmiq=False, run_combat=False,
+        pca_k=0, dmp_groups=("run", "1", "2"),
+    )
+    assert res.dmp is not None
+    out = res.dmp.toPandas()
+    assert len(out) > 0 and out["adj_p"].between(0, 1).all()
+
+
+def test_pipeline_dmp_missing_group_column_raises(spark, meth, probes):
+    from methyl_data_pipeline_spark.plans.pipeline import run_methylation_pipeline
+
+    with pytest.raises(ValueError, match="'genotype'"):
+        run_methylation_pipeline(
+            meth, probes, None, run_bmiq=False, run_combat=False,
+            pca_k=0, dmp_groups=("genotype", "WT", "KO"),
+        )
+
+
+def test_pipeline_dmp_single_level_raises_before_any_job(spark, meth, probes):
+    """One named level would leave every probe below the two-group
+    minimum and return an empty ``dmp``; it must fail before QC runs."""
+    from methyl_data_pipeline_spark.plans.pipeline import run_methylation_pipeline
+
+    tracker = spark.sparkContext.statusTracker()
+    before = tracker.getJobIdsForGroup(None)
+    with pytest.raises(ValueError, match="single level"):
+        run_methylation_pipeline(
+            meth, probes, None, run_bmiq=False, run_combat=False,
+            pca_k=0, dmp_groups=("run", "1"),
+        )
+    assert tracker.getJobIdsForGroup(None) == before
+
+
 def test_bh_grouped_matches_window_version(spark):
     """bh_adjust_grouped must be BIT-identical to the window path —
     heavy ties (its fast case), nulls, and the 0/1 endpoints."""

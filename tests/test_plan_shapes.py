@@ -8,22 +8,15 @@ pathological plan shape, these fail before the bench does.
 
 from __future__ import annotations
 
-import contextlib
-import io
+import importlib.util
+import os
 import re
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-SF_DIR = "/root/testdata/sf0.001"
-
-
-def _formatted(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from conftest import SF_DIR, explain
 
 
 def _distinct_persists(plan: str) -> set[str]:
@@ -52,7 +45,7 @@ def test_curate_batch_twin_gate_stays_above_the_exchange(docs):
     gate-bearing Filter appears without ``_bar`` and this fails."""
     from methyl_data_pipeline_spark.streaming.events import curate_batch_twin
 
-    plan = _formatted(curate_batch_twin(docs))
+    plan = explain(curate_batch_twin(docs), "formatted")
     blocks = [b for b in plan.split("\n(") if b.startswith(tuple("0123456789"))]
     gate_blocks = [b for b in blocks if "too_short" in b and ") Filter" in b.splitlines()[0]]
     assert gate_blocks, "quality gate filter not found in the plan"
@@ -74,7 +67,7 @@ def test_curate_plan_has_exactly_one_narrow_persist(docs):
 
     bench = docs.filter(F.col("doc_id") % 13 == 0)
     corpus = docs.filter(F.col("doc_id") % 13 != 0)
-    plan = _formatted(curate(corpus, bench))
+    plan = explain(curate(corpus, bench), "formatted")
     # distinct cached plans, not reference counts: the narrow red frame
     # may legitimately be referenced many times.
     cached_cols = _distinct_persists(plan)
@@ -94,7 +87,7 @@ def test_bpe_encode_word_stream_is_spread(docs):
     run on the single-partition local scan."""
     from methyl_data_pipeline_spark.ext.text import bpe_encode
 
-    plan = _formatted(bpe_encode(docs, [("t", "h")]))
+    plan = explain(bpe_encode(docs, [("t", "h")]), "formatted")
     assert "hashpartitioning(doc_id" in plan, (
         "bpe_encode lost the word-stream spread — the tokenize explode "
         "will serialize on a 1-partition scan"
@@ -116,7 +109,7 @@ def test_combat_plan_has_one_eb_kernel_and_one_persisted_z(spark):
     ]
     df = spark.createDataFrame(rows, ["probe_id", "sample_id", "run", "beta"])
     try:
-        plan = _formatted(combat(df))
+        plan = explain(combat(df), "formatted")
     finally:
         cache.release_all()
     kernels = re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)
@@ -162,7 +155,7 @@ def test_pipeline_dmp_plans_from_the_cut_lineage(full_run):
     reuse points instead, every action re-planned the whole QC -> BMIQ
     -> ComBat lineage (50 exchanges in this plan at the methyl_dmp
     benchmark size)."""
-    plan = _formatted(full_run.dmp)
+    plan = explain(full_run.dmp, "formatted")
     assert not re.findall(r"^\(\d+\) FlatMapGroupsInPandas", plan, re.M)
     exchanges = re.findall(r"^\(\d+\) Exchange", plan, re.M)
     assert len(exchanges) <= 10, f"{len(exchanges)} exchanges in the dmp plan"
@@ -189,7 +182,9 @@ def test_pipeline_cuts_each_reuse_point_once(
     try:
         res = _run_pipeline(spark, methyl_inputs, run_bmiq, run_combat, top_k=60, pca_k=0)
         assert len(cuts) == 1 + run_bmiq + run_combat
-        leaves = re.findall(r"^\(\d+\) (\w*Scan\b[^\n]*)", _formatted(res.normalized), re.M)
+        leaves = re.findall(
+            r"^\(\d+\) (\w*Scan\b[^\n]*)", explain(res.normalized, "formatted"), re.M
+        )
         assert len(leaves) == 1 and leaves[0].startswith("Scan ExistingRDD"), leaves
         assert "beta_final" in res.normalized.columns
     finally:
@@ -213,3 +208,74 @@ def test_pipeline_outputs_survive_the_benchmark_teardown(full_run):
     after = values(full_run.normalized, norm_keys), values(full_run.dmp, dmp_keys)
     for b, a in zip(before, after):
         pd.testing.assert_frame_equal(a, b, check_exact=False, rtol=1e-9)
+
+
+def test_release_all_sends_dropped_handles_to_the_jvm(spark, monkeypatch):
+    """A used DataFrame's py4j handle sits in a reference cycle, and py4j
+    sends the release of a freed handle from a finalizer thread that
+    sleeps a second when idle. ``release_all`` collects the cycle and
+    sends the release itself, from the calling thread, before it
+    returns."""
+    import threading
+
+    from pyspark import SparkContext
+
+    from methyl_data_pipeline_spark import cache
+
+    client = SparkContext._gateway._gateway_client
+    real = client.garbage_collect_object
+    sent = []
+
+    def recording(target_id, enqueue=True):
+        if not enqueue:
+            sent.append((threading.get_ident(), target_id))
+        return real(target_id, enqueue)
+
+    monkeypatch.setattr(client, "garbage_collect_object", recording)
+    cache.release_all()  # start from an empty queue
+    df = spark.range(3).selectExpr("id * 2 AS x")
+    assert df.count() == 3  # caches a JavaMember on the handle: a cycle
+    target = df._jdf._target_id
+    del df
+    cache.release_all()
+    assert (threading.get_ident(), target) in sent
+
+
+# ---------------------------------------------------------------------------
+# The plan-audit floor (tools/plans.py audit): no CartesianProduct, no
+# row-at-a-time BatchEvalPython.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def plans_tool():
+    path = os.path.join(os.path.dirname(__file__), os.pardir, "tools", "plans.py")
+    spec = importlib.util.spec_from_file_location("plans_tool", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_plan_audit_trips_on_a_cartesian_product(spark, plans_tool):
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # else the tiny side plans as a broadcast loop
+    try:
+        plan = plans_tool.physical_plan(spark.range(3).crossJoin(spark.range(4)))
+    finally:
+        spark.conf.set(key, old)
+    assert plans_tool.audit_plan(plan) == ["CartesianProduct (unbroadcast cross join)"]
+
+
+def test_plan_audit_trips_on_a_row_at_a_time_udf(spark, plans_tool):
+    plus_one = F.udf(lambda x: x + 1, "long")
+    plan = plans_tool.physical_plan(spark.range(3).select(plus_one("id")))
+    assert plans_tool.audit_plan(plan) == ["BatchEvalPython (row-at-a-time Python UDF)"]
+
+
+def test_plan_audit_passes_the_methyl_queries(spark, plans_tool):
+    names = [
+        "pipeline_end_to_end", "methyl_pipeline_chain", "meth_moderated_t",
+        "combat_correction", "pca_scores",
+    ]
+    assert plans_tool.audit(spark, SF_DIR, names) == []

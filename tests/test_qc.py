@@ -69,15 +69,6 @@ def test_filter_probes_by_detp(meth, meth_pdf):
     assert kept == want
 
 
-def test_scrub_nonfinite(spark):
-    df = spark.createDataFrame(
-        [(1, 1.0), (2, float("nan")), (3, float("inf")), (4, -float("inf"))],
-        ["id", "v"],
-    )
-    out = qc.scrub_nonfinite(df, ["v"]).collect()
-    assert [r["id"] for r in out] == [1]
-
-
 def test_audit_membership(spark, meth):
     samples = spark.createDataFrame(
         [("TB1_1",), ("TB2_1",), ("TB_GHOST",)], ["sample_id"]
@@ -85,36 +76,6 @@ def test_audit_membership(spark, meth):
     sheet_only, matrix_only = qc.audit_membership(samples, meth)
     assert [r["sample_id"] for r in sheet_only.collect()] == ["TB_GHOST"]
     assert matrix_only.count() == meth.select("sample_id").distinct().count() - 2
-
-
-def test_approx_quantiles_near_exact(spark):
-    import numpy as np
-
-    from methyl_data_pipeline_spark.operators.topk import approx_quantiles_per_group
-
-    rng = np.random.RandomState(8)
-    rows = [
-        (("A" if i % 2 else "B"), float(v))
-        for i, v in enumerate(rng.normal(100, 15, 4000))
-    ]
-    df = spark.createDataFrame(rows, "grp string, val double")
-    approx = {
-        r.grp: (r.q25, r.q50, r.q75)
-        for r in approx_quantiles_per_group(df, "val", ["grp"]).collect()
-    }
-    exact = {
-        r.grp: (r.e25, r.e50, r.e75)
-        for r in df.groupBy("grp")
-        .agg(
-            F.expr("percentile(val, 0.25)").alias("e25"),
-            F.expr("percentile(val, 0.5)").alias("e50"),
-            F.expr("percentile(val, 0.75)").alias("e75"),
-        )
-        .collect()
-    }
-    for g in exact:
-        for a, e in zip(approx[g], exact[g]):
-            assert abs(a - e) < 1.0, (g, a, e)  # ~0.07 sigma at n=2000
 
 
 def test_sample_correlation_matches_pandas(spark):
@@ -148,14 +109,8 @@ def test_sample_correlation_matches_pandas(spark):
     assert got[("s1", "s3")][0] < got[("s1", "s2")][0]
 
 
-def test_contracts_check_and_raise(spark):
-    from methyl_data_pipeline_spark.operators.contracts import (
-        ContractViolation,
-        check,
-        check_report,
-        expect_aligned_samples,
-        expect_complete_matrix,
-    )
+def test_contracts_check_report_null_strict(spark):
+    from methyl_data_pipeline_spark.operators.contracts import check_report
 
     df = spark.createDataFrame(
         [("cg1", "s1", 0.5), ("cg1", "s2", 1.5), ("cg2", "s1", None)],
@@ -170,20 +125,6 @@ def test_contracts_check_and_raise(spark):
     ).collect()
     # null-strict: the NULL beta fails BOTH predicates
     assert row["in_range"] == 2 and row["non_null"] == 1
-
-    ok = df.filter((F.col("beta") >= 0) & (F.col("beta") <= 1))
-    assert check(ok, {"in_range": F.col("beta") <= 1}) is ok
-    with pytest.raises(ContractViolation, match="in_range: 2 rows"):
-        check(df, {"in_range": (F.col("beta") >= 0) & (F.col("beta") <= 1)})
-
-    # completeness: cg2 seen in 1 of 2 samples (and cg1's null drops it)
-    with pytest.raises(ContractViolation, match="probes not observed"):
-        expect_complete_matrix(df, n_samples=2)
-
-    sheet = spark.createDataFrame([("s1",), ("s2",)], "sample_id string")
-    assert expect_aligned_samples(df, sheet) is df
-    with pytest.raises(ContractViolation, match="1 in sheet only"):
-        expect_aligned_samples(df.filter(F.col("sample_id") == "s1"), sheet)
 
 
 def test_sample_correlation_blocked_parity(spark):

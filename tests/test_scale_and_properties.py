@@ -8,9 +8,10 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from conftest import explain
 from methyl_data_pipeline_spark import model
 from methyl_data_pipeline_spark.io.writers import write_parquet_by_run
-from methyl_data_pipeline_spark.operators.scale import salted_aggregate, salted_mean
+from methyl_data_pipeline_spark.operators.scale import salted_aggregate
 from methyl_data_pipeline_spark.stats.bh import bh_adjust
 
 
@@ -33,11 +34,6 @@ def test_salted_aggregate_equals_plain(spark):
         assert got[k][1] == want[k][1]
         assert abs(got[k][0] - want[k][0]) < 1e-9
 
-    m = {r["k"]: r["mean_v"] for r in salted_mean(df, ["k"], "v").collect()}
-    wm = {r["k"]: r["m"] for r in df.groupBy("k").agg(F.avg("v").alias("m")).collect()}
-    for k in wm:
-        assert abs(m[k] - wm[k]) < 1e-9
-
 
 def test_partitioned_write_prunes(spark, tmp_path):
     df = spark.createDataFrame(
@@ -47,7 +43,7 @@ def test_partitioned_write_prunes(spark, tmp_path):
     out = str(tmp_path / "by_run")
     write_parquet_by_run(df, out)
     back = spark.read.parquet(out).filter(F.col("run") == "1")
-    plan = back._jdf.queryExecution().executedPlan().toString()
+    plan = explain(back)
     assert "PartitionFilters: [isnotnull(run" in plan or "run#" in plan
     # pruned read touches only the run=1 directory
     files = back.select(F.input_file_name()).distinct().collect()
@@ -89,8 +85,8 @@ def test_bucketed_join_avoids_shuffle(spark, tmp_path):
         spark.table("t_bucketed_b").groupBy("probe_id").agg(F.avg("beta").alias("m")),
         "probe_id",
     )
-    agg_plan = a._jdf.queryExecution().executedPlan().toString()
-    join_plan = joined._jdf.queryExecution().executedPlan().toString()
+    agg_plan = explain(a)
+    join_plan = explain(joined)
     # neither the agg nor the join needs an Exchange on the bucket key
     assert "Exchange hashpartitioning(probe_id" not in agg_plan
     assert "Exchange hashpartitioning(probe_id" not in join_plan
@@ -204,8 +200,8 @@ def test_salting_invariant_under_repartition(spark):
 
     def run(df):
         return {
-            r["k"]: (round(r["mean_v"], 12))
-            for r in salted_mean(df, ["k"], "v", salt_buckets=8).collect()
+            r["k"]: round(r["sum_v"] / r["n"], 12)
+            for r in salted_aggregate(df, ["k"], ["v"], salt_buckets=8).collect()
         }
 
     narrow = run(base.repartition(1))
@@ -333,7 +329,7 @@ def test_quality_gate_is_scan_side(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     kept = docs.filter(quality_reject_reasons() == F.lit(""))
-    plan = kept._jdf.queryExecution().executedPlan().toString()
+    plan = explain(kept)
     assert "Exchange" not in plan
     assert "FileScan parquet" in plan
 
@@ -393,7 +389,7 @@ def test_segment_dedup_skewed_boilerplate(spark):
 
     # map-side combine: the winners agg must be a two-phase
     # HashAggregate (partial + final) around its exchange
-    plan = segment_dedup(df)._jdf.queryExecution().executedPlan().toString()
+    plan = explain(segment_dedup(df))
     assert plan.count("HashAggregate") >= 2
     assert "partial_min" in plan or "partial_" in plan
 

@@ -1,9 +1,7 @@
-"""Stateful streaming operator + the reference's entry-point-A ingest
-path (main.main(): wide CSVs -> projection -> outer combine -> stats)."""
+"""The reference's entry-point-A ingest path (main.main(): wide CSVs ->
+projection -> outer combine -> stats)."""
 
 from __future__ import annotations
-
-import os
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -12,162 +10,6 @@ from methyl_data_pipeline_spark import model
 from methyl_data_pipeline_spark.io.readers import read_beta_csv
 from methyl_data_pipeline_spark.operators.joins import combine_runs_wide
 from methyl_data_pipeline_spark.operators.qc import health_report
-from methyl_data_pipeline_spark.streaming.events import stream_events_from_parquet
-from methyl_data_pipeline_spark.streaming.stateful import running_user_stats
-
-
-def test_stateful_running_stats_across_batches(spark, tmp_path):
-    """State must carry across micro-batches: feed two files, check the
-    second batch's counts include the first."""
-    src = str(tmp_path / "src")
-    os.makedirs(src)
-
-    def write_batch(name, rows):
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "value"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-
-    write_batch("b1", [(1, "2024-01-01 00:00:00", 7, 1.0), (2, "2024-01-01 00:01:00", 7, 2.0)])
-
-    stream = stream_events_from_parquet(spark, src)
-    out = running_user_stats(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("stateful_test")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        first = {r["user_id"]: r for r in spark.sql("SELECT * FROM stateful_test").collect()}
-        assert first[7]["n"] == 2
-        assert abs(first[7]["mean"] - 1.5) < 1e-12
-
-        write_batch("b2", [(3, "2024-01-01 00:02:00", 7, 3.0), (4, "2024-01-01 00:02:30", 8, 5.0)])
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM stateful_test").collect()
-        latest = {}
-        for r in rows:  # memory sink appends update rows; keep max-n per user
-            if r["user_id"] not in latest or r["n"] > latest[r["user_id"]]["n"]:
-                latest[r["user_id"]] = r
-        assert latest[7]["n"] == 3  # state carried: 2 (batch 1) + 1 (batch 2)
-        assert abs(latest[7]["mean"] - 2.0) < 1e-12
-        assert latest[8]["n"] == 1
-    finally:
-        q.stop()
-
-
-def test_streaming_funnel_state_across_batches(spark, tmp_path):
-    """Funnel state survives micro-batches (view in batch 1, click in
-    batch 2 advances to stage 1) and matches the batch twin when
-    batches respect event-time order."""
-    from methyl_data_pipeline_spark.streaming.events import funnel_steps
-    from methyl_data_pipeline_spark.streaming.stateful import streaming_funnel
-
-    src = str(tmp_path / "fsrc")
-    os.makedirs(src)
-
-    def write_batch(rows):
-        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id", "event_type"])
-        pdf["ts"] = pd.to_datetime(pdf["ts"])
-        spark.createDataFrame(pdf).coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: u7 views; u8 purchases (wrong first step -> no advance)
-    write_batch([(1, "2024-01-01 00:00:00", 7, "view"),
-                 (2, "2024-01-01 00:00:30", 8, "purchase")])
-    stream = stream_events_from_parquet(spark, src)
-    out = streaming_funnel(stream)
-    q = (out.writeStream.outputMode("update").format("memory")
-         .queryName("funnel_test").start())
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM funnel_test").collect()
-        assert {(r.user_id, r.stage) for r in rows} == {(7, 0)}
-        # batch 2: u7 clicks then purchases -> jumps to stage 2
-        write_batch([(3, "2024-01-01 00:01:00", 7, "click"),
-                     (4, "2024-01-01 00:02:00", 7, "purchase")])
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM funnel_test").collect()
-        latest = {}
-        for r in rows:
-            if r.user_id not in latest or r.stage > latest[r.user_id].stage:
-                latest[r.user_id] = r
-        assert latest[7].stage == 2 and latest[7].step == "purchase"
-        assert 8 not in latest
-        # parity with the batch twin over the full event set
-        ev = spark.read.parquet(src)
-        twin = {r.user_id: r for r in funnel_steps(ev).collect()}
-        assert twin[7].t_purchase is not None
-        assert twin[7].t_purchase == latest[7].stage_ts
-        assert twin[8].t_view is None
-    finally:
-        q.stop()
-
-
-def test_streaming_funnel_nullfix_parity(spark, tmp_path):
-    """Batch-twin parity on the NULL-events fixture (VERDICT r7 #5):
-    NULL user / NULL ts / NULL event_type rows must be dropped
-    identically by the stateful state machine and the offline
-    conditional-MIN twin — the streaming side must not dedicate a state
-    key group to user NULL."""
-    import shutil
-    import subprocess
-    import sys
-
-    from methyl_data_pipeline_spark.streaming.events import funnel_steps
-    from methyl_data_pipeline_spark.streaming.stateful import streaming_funnel
-
-    fixture = "/root/repo/.nullfix/events.parquet"
-    if not os.path.exists(fixture):
-        subprocess.run(
-            [sys.executable, "/root/repo/tools/make_null_fixture.py"], check=True
-        )
-    src = str(tmp_path / "nullev")
-    os.makedirs(src)
-    shutil.copy(fixture, os.path.join(src, "events.parquet"))
-
-    ev = spark.read.parquet(src)
-    assert ev.filter(F.col("user_id").isNull()).count() > 0
-    assert ev.filter(F.col("ts").isNull()).count() > 0
-    assert ev.filter(F.col("event_type").isNull()).count() > 0
-
-    stream = stream_events_from_parquet(spark, src)
-    out = streaming_funnel(stream)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("funnel_nullfix")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM funnel_nullfix").collect()
-    finally:
-        q.stop()
-    latest = {}
-    for r in rows:  # update sink appends; keep the highest stage per user
-        if r.user_id not in latest or r.stage > latest[r.user_id].stage:
-            latest[r.user_id] = r
-    assert None not in latest  # NULL user never gets a state row
-
-    twin = {r.user_id: r for r in funnel_steps(ev).collect()}
-    assert None not in twin
-    steps = ("view", "click", "purchase")
-    # one batch covers everything -> exact parity: the streaming side's
-    # highest stage & its timestamp equal the twin's deepest non-NULL
-    # t_<step>
-    twin_latest = {}
-    for uid, r in twin.items():
-        stage = -1
-        ts = None
-        for i, s in enumerate(steps):
-            t = r[f"t_{s}"]
-            if t is not None:
-                stage, ts = i, t
-        if stage >= 0:
-            twin_latest[uid] = (stage, ts)
-    got = {uid: (r.stage, r.stage_ts) for uid, r in latest.items()}
-    assert got == twin_latest
 
 
 def test_entry_point_a_ingest(spark, tmp_path):
@@ -219,65 +61,3 @@ def test_entry_point_a_ingest(spark, tmp_path):
         .filter(F.col("n") == 3)
     )
     assert complete.count() == 50  # probes present in both runs
-
-
-def test_streaming_dedup_gate_across_batches_and_batch_twin(spark, tmp_path):
-    """Only a fingerprint's first arrival passes; a later-batch
-    duplicate is gated even with a smaller id; one-batch replay equals
-    dedup_exact's min-id winners; NULL text drops."""
-    from methyl_data_pipeline_spark.ext.dedup import dedup_exact
-    from methyl_data_pipeline_spark.streaming.stateful import streaming_dedup_gate
-
-    src = str(tmp_path / "dsrc")
-    os.makedirs(src)
-
-    def write_batch(rows):
-        pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-        spark.createDataFrame(pdf.astype({"doc_id": "int64"})).coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    body = "the exact same document body here"
-    write_batch([(10, body), (11, "a different document"), (12, body)])
-    stream = (
-        spark.readStream.schema("doc_id long, text string").parquet(src)
-    )
-    out = streaming_dedup_gate(stream)
-    q = (out.writeStream.outputMode("update").format("memory")
-         .queryName("dedup_gate_test").start())
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM dedup_gate_test").collect()
-        # batch 1: min-id winner per body
-        assert {r.doc_id for r in rows} == {10, 11}
-        # batch 2: smaller-id duplicate arrives late -> gated
-        # (first-arrival; the committed winner stands); a novel doc and
-        # a NULL-text doc
-        write_batch([(5, body), (20, "novel text"), (21, None)])
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM dedup_gate_test").collect()
-        assert {r.doc_id for r in rows} == {10, 11, 20}
-    finally:
-        q.stop()
-
-    # one-batch replay over everything == dedup_exact (min-id winners,
-    # NULLs FIRST: a NULL-id row wins its fingerprint in BOTH paths —
-    # code review r9)
-    src2 = str(tmp_path / "dsrc2")
-    extra = spark.createDataFrame(
-        [(None, "body only the null-id row carries")],
-        "doc_id long, text string",
-    )
-    all_rows = spark.read.parquet(src).unionByName(extra)
-    all_rows.coalesce(1).write.parquet(src2)
-    stream2 = spark.readStream.schema("doc_id long, text string").parquet(src2)
-    q2 = (streaming_dedup_gate(stream2).writeStream.outputMode("update")
-          .format("memory").queryName("dedup_gate_twin").start())
-    try:
-        q2.processAllAvailable()
-        got = {r.doc_id for r in spark.sql("SELECT * FROM dedup_gate_twin").collect()}
-    finally:
-        q2.stop()
-    twin = {r.doc_id for r in dedup_exact(all_rows).collect()}
-    assert got == twin and 5 in got  # one batch: min id 5 wins
-    assert None in got  # the NULL-id winner survives in both paths

@@ -275,35 +275,6 @@ def test_real_media_features(spark):
     assert out[5]["kind"] == "digest"
 
 
-def test_decode_image_shapes(spark):
-    from methyl_data_pipeline_spark.ext.multimodal import attach_binary, decode_image
-
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "another payload")], "doc_id long, text string"
-    )
-    out = decode_image(attach_binary(docs), width=8, height=4).collect()
-    assert len(out) == 2
-    for r in out:
-        # utf-8 payloads are not BMP, so the deterministic fallback runs
-        assert (r.width, r.height, r.mode) == (8, 4, "FAKE")
-        assert len(bytes(r.pixels)) == 8 * 4 * 3
-    # deterministic: same payload -> same pixels
-    again = decode_image(attach_binary(docs), width=8, height=4).collect()
-    assert {r.id: bytes(r.pixels) for r in again} == {
-        r.id: bytes(r.pixels) for r in out
-    }
-
-
-def test_decode_audio_waveform(spark):
-    from methyl_data_pipeline_spark.ext.multimodal import attach_binary, decode_audio
-
-    docs = spark.createDataFrame([(7, "clip bytes")], "doc_id long, text string")
-    (r,) = decode_audio(attach_binary(docs), sample_rate=100, clip_seconds=0.5).collect()
-    assert r.sample_rate == 100 and r.n_samples == 50
-    assert len(r.waveform) == 50
-    assert all(-1.0 <= v <= 1.0 for v in r.waveform)
-
-
 def test_frame_sample_one_to_many(spark):
     from methyl_data_pipeline_spark.ext.multimodal import attach_binary, frame_sample
 
@@ -316,90 +287,6 @@ def test_frame_sample_one_to_many(spark):
     assert [r.frame_idx for r in out] == [0, 2]
     assert [r.t_offset for r in out] == [0.0, 0.2]
     assert len({r.frame_digest for r in out}) == 2
-
-
-def test_streaming_dedup_drops_in_watermark_duplicates(spark, tmp_path):
-    from methyl_data_pipeline_spark.streaming.events import (
-        stream_dedup,
-        stream_events_from_parquet,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": [1, 1, 2, 2, 3],  # dup event_ids within one batch
-            "ts": pd.to_datetime(
-                [
-                    "2024-01-01 00:10:00",
-                    "2024-01-01 00:11:00",
-                    "2024-01-01 00:20:00",
-                    "2024-01-01 00:21:00",
-                    "2024-01-01 00:30:00",
-                ]
-            ),
-            "user_id": [1, 1, 2, 2, 3],
-            "event_type": ["click"] * 5,
-            "value": [1.0, 1.0, 2.0, 2.0, 3.0],
-        }
-    )
-    src = str(tmp_path / "dedup_src")
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-
-    stream = stream_events_from_parquet(spark, src)
-    q = (
-        stream_dedup(stream, ["event_id"], watermark="1 hour")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_test")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        ids = sorted(
-            r["event_id"] for r in spark.sql("SELECT * FROM dedup_test").collect()
-        )
-    finally:
-        q.stop()
-    assert ids == [1, 2, 3]
-
-
-def test_stream_static_enrich(spark, tmp_path):
-    from methyl_data_pipeline_spark.streaming.events import (
-        stream_enrich,
-        stream_events_from_parquet,
-    )
-
-    pdf = pd.DataFrame(
-        {
-            "event_id": [1, 2],
-            "ts": pd.to_datetime(["2024-01-01 00:10:00", "2024-01-01 00:20:00"]),
-            "user_id": [1, 2],
-            "event_type": ["click", "view"],
-            "value": [1.0, 2.0],
-        }
-    )
-    src = str(tmp_path / "enrich_src")
-    os.makedirs(src, exist_ok=True)
-    spark.createDataFrame(pdf).write.mode("overwrite").parquet(src)
-    dim = spark.createDataFrame(
-        [(1, "gold"), (2, "silver")], "user_id long, tier string"
-    )
-    q = (
-        stream_enrich(stream_events_from_parquet(spark, src), dim)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("enrich_test")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r["event_id"]: r["tier"]
-            for r in spark.sql("SELECT * FROM enrich_test").collect()
-        }
-    finally:
-        q.stop()
-    assert got == {1: "gold", 2: "silver"}
 
 
 def test_bmp_codec_roundtrip():
@@ -430,57 +317,6 @@ def test_wav_codec_roundtrip():
     # 8-bit path
     rate8, back8 = decode_wav(encode_wav(8000, sig, bits=8))
     np.testing.assert_allclose(back8, sig, atol=1.5 / 127)
-
-
-def test_decode_image_real_bmp(spark):
-    """BMP payloads decode to REAL pixel values through the Spark
-    mapInPandas path (resize disabled by matching target shape)."""
-    import numpy as np
-
-    from methyl_data_pipeline_spark.ext.codecs import encode_bmp
-    from methyl_data_pipeline_spark.ext.multimodal import decode_image
-
-    rng = np.random.RandomState(1)
-    w, h = 6, 4
-    rgb = rng.randint(0, 256, size=w * h * 3, dtype=np.uint8).tobytes()
-    bmp = encode_bmp(w, h, rgb)
-    media = spark.createDataFrame(
-        [(1, "image", "image/bmp", len(bmp), bytearray(bmp))],
-        "id long, modality string, mime string, n_bytes long, content binary",
-    )
-    out = decode_image(media, width=w, height=h).collect()
-    assert len(out) == 1
-    assert out[0]["mode"] == "RGB"
-    assert bytes(out[0]["pixels"]) == rgb
-    # non-BMP payloads keep the deterministic fallback, marked FAKE
-    fake_media = spark.createDataFrame(
-        [(2, "image", "image/jpeg", 3, bytearray(b"xyz"))],
-        "id long, modality string, mime string, n_bytes long, content binary",
-    )
-    fake = decode_image(fake_media, width=4, height=4).collect()[0]
-    assert fake["mode"] == "FAKE" and len(bytes(fake["pixels"])) == 4 * 4 * 3
-
-
-def test_decode_audio_real_wav(spark):
-    """PCM WAV payloads produce the true waveform (resampled 8k->4k,
-    padded to the clip length) through mapInPandas."""
-    import numpy as np
-
-    from methyl_data_pipeline_spark.ext.codecs import encode_wav
-    from methyl_data_pipeline_spark.ext.multimodal import decode_audio
-
-    sig = np.linspace(-0.9, 0.9, 800)  # ramp at 8 kHz (0.1 s)
-    wav = encode_wav(8000, sig, bits=16)
-    media = spark.createDataFrame(
-        [(1, "audio", "audio/wav", len(wav), bytearray(wav))],
-        "id long, modality string, mime string, n_bytes long, content binary",
-    )
-    out = decode_audio(media, sample_rate=4000, clip_seconds=0.2).collect()[0]
-    assert out["sample_rate"] == 4000 and out["n_samples"] == 800
-    got = np.array(out["waveform"])
-    # first 0.1 s: every-2nd ramp sample; remainder: zero padding
-    np.testing.assert_allclose(got[:400], sig[::2], atol=2e-4)
-    assert np.all(got[400:] == 0.0)
 
 
 def test_quality_gate_scan_matches_agg_variant(spark):
@@ -787,16 +623,25 @@ def test_stream_curate_parity_with_batch_chain(spark, tmp_path):
 
 
 def test_curated_ingest_checkpoint_recovery(spark, tmp_path):
-    """Exactly-once incremental ingest (streaming.events.
-    start_curated_ingest): an availableNow run drains the files present,
-    then terminates; a second run from the SAME checkpoint picks up only
-    newly-arrived files (source offsets restored) and still drops a new
-    doc whose fingerprint duplicates a run-1 doc (dedup operator state
-    restored, not rebuilt). This is the engine-managed twin of
+    """Exactly-once incremental ingest through stream_curate: an
+    availableNow run drains the files present, then terminates; a second
+    run from the SAME checkpoint picks up only newly-arrived files
+    (source offsets restored) and still drops a new doc whose
+    fingerprint duplicates a run-1 doc (dedup operator state restored,
+    not rebuilt). This is the engine-managed twin of
     ext.dedup.incremental_dedup's explicit ledger."""
-    from pyspark.sql import functions as F
+    from methyl_data_pipeline_spark.streaming.events import stream_curate
 
-    from methyl_data_pipeline_spark.streaming.events import start_curated_ingest
+    def ingest():
+        stream = stream_events_from_parquet(spark, src)
+        return (
+            stream_curate(stream).writeStream.format("parquet")
+            .option("path", sink)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
 
     def doc(i, text):
         return (i, text, "2024-01-01 12:00:00")
@@ -817,7 +662,7 @@ def test_curated_ingest_checkpoint_recovery(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     batch1.coalesce(2).write.mode("overwrite").parquet(src)
 
-    q = start_curated_ingest(spark, src, sink, ckpt)
+    q = ingest()
     q.awaitTermination()
     got1 = {r.doc_id for r in spark.read.parquet(sink).collect()}
     assert got1 == set(range(10, 20))
@@ -833,7 +678,7 @@ def test_curated_ingest_checkpoint_recovery(spark, tmp_path):
     )
     batch2.coalesce(1).write.mode("append").parquet(src)
 
-    q = start_curated_ingest(spark, src, sink, ckpt)
+    q = ingest()
     q.awaitTermination()
     rows = spark.read.parquet(sink).collect()
     ids = sorted(r.doc_id for r in rows)

@@ -20,7 +20,7 @@ This tool closes the class for good:
 
 Usage: python tools/audit_oracle_types.py [--sf-dir DIR] [query ...]
 Exit 0 = clean.  Designed for the per-round loop next to
-check_oracle.py / audit_plans.py.
+check_oracle.py / plans.py.
 """
 
 from __future__ import annotations
