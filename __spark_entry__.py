@@ -1164,7 +1164,8 @@ ORDER BY k.doc_id
 
 
 def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (8 salted hash mins over 3-word shingles)."""
+    """MinHash signatures (8 universal-hash mins of one md5 per 3-word
+    shingle)."""
     from methyl_data_pipeline_spark.ext.dedup import minhash_signatures
 
     docs = _t(spark, sf_dir, "documents")
@@ -1249,7 +1250,17 @@ _BANDREC_SHORT = " ".join(f"zq{i}" for i in range(1, 13))
 _BANDREC_LONG = " ".join(f"zl{i}" for i in range(1, 41))
 
 
-def _q_minhash_recall(spark: SparkSession, sf_dir: str, mix: str) -> DataFrame:
+def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LSH banding recall certificate (ext.dedup.minhash_band_recall,
+    VERDICT r10 #3): per Jaccard decile, the fraction of exact
+    n-gram-Jaccard >= 0.1 pairs the (8 hashes, 4 bands) candidates
+    recover, beside the theoretical 1-(1-j^2)^4 S-curve at the bin
+    midpoint. Mid-similarity pairs are planted engine-neutrally by
+    suffix-append: doc_id < 200 re-enters as id+100000 with 12 novel
+    tokens appended, doc_id < 100 as id+200000 with 40 — Jaccard vs the
+    original ~w/(w+m) varies with each doc's length w, spreading pairs
+    across bins. Oracle: full DuckDB replay (hashed shingle sets,
+    brute-force exact Jaccard, banding candidates, per-bin recall)."""
     from methyl_data_pipeline_spark.ext.dedup import minhash_band_recall
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1262,56 +1273,16 @@ def _q_minhash_recall(spark: SparkSession, sf_dir: str, mix: str) -> DataFrame:
         F.concat(F.col("text"), F.lit(" " + _BANDREC_LONG)).alias("text"),
     )
     corpus = docs.unionByName(short).unionByName(long_)
-    out = minhash_band_recall(
-        corpus, num_hashes=8, bands=4, min_jaccard=0.1, mix=mix
-    )
+    out = minhash_band_recall(corpus, num_hashes=8, bands=4, min_jaccard=0.1)
     return out.orderBy("jacc_bin")
 
 
-def q_minhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH banding recall certificate (ext.dedup.minhash_band_recall,
-    VERDICT r10 #3): per Jaccard decile, the fraction of exact
-    n-gram-Jaccard >= 0.1 pairs the (8 hashes, 4 bands) candidates
-    recover, beside the theoretical 1-(1-j^2)^4 S-curve at the bin
-    midpoint. Mid-similarity pairs are planted engine-neutrally by
-    suffix-append: doc_id < 200 re-enters as id+100000 with 12 novel
-    tokens appended, doc_id < 100 as id+200000 with 40 — Jaccard vs the
-    original ~w/(w+m) varies with each doc's length w, spreading pairs
-    across bins. Oracle: full DuckDB replay (hashed shingle sets,
-    brute-force exact Jaccard, banding candidates, per-bin recall)."""
-    return _q_minhash_recall(spark, sf_dir, "linear")
-
-
-def q_minhash_recall_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same banding recall certificate over the SALTED (independent
-    per-function md5) signature family — the measured counterpart to
-    the default linear-mix family, whose systematic correlation the
-    linear certificate exposed (mid-bin candidate rates 78-92% vs the
-    23-76% theory). Salted restores mid-bin selectivity to the
-    theory's neighborhood (19-66% at bins 2-5); what deviation remains
-    is single-hash-draw fluctuation on the fixture's small shingle
-    universe, not family structure (see minhash_signatures docstring
-    for the per-function probe). Recall at dedup-relevant bins (>=0.7)
-    is ~100% in both families."""
-    return _q_minhash_recall(spark, sf_dir, "salted")
-
-
-def _sql_minhash_recall(mix: str = "linear") -> str:
+def _sql_minhash_recall() -> str:
     body = _sql_minhash_cte("corpus")
     bands = "\nUNION ALL\n".join(
         f"SELECT doc_id, {b} AS band_idx, md5(CAST(mh_{2*b} AS VARCHAR) || '_' || CAST(mh_{2*b+1} AS VARCHAR)) AS band_hash FROM sigs"
         for b in range(4)
     )
-    if mix == "salted":
-        # independent per-function salted md5 mins (no linear mixing)
-        mins = ",\n       ".join(
-            f"list_min(list_transform(shingles,"
-            f" s -> ('0x' || substr(md5('mh{i}|' || s), 1, 15))::BIGINT)) AS mh_{i}"
-            for i in range(8)
-        )
-        sigs_from = f"SELECT doc_id, {mins} FROM hsh"
-    else:
-        sigs_from = f"SELECT doc_id, {_minhash_mins_sql(8)} FROM hsh"
     # theory chain mirrors the Spark side op-for-op: j clamped at the
     # bin midpoint, j*j, then ((q*q)*q)*q — no pow()
     jm = "LEAST((jacc_bin + 0.5) / 10.0, 1.0)"
@@ -1343,7 +1314,7 @@ exact AS (
   )
   WHERE CAST(inter AS DOUBLE) / un >= 0.1
 ),
-sigs AS ({sigs_from}),
+sigs AS (SELECT doc_id, {_minhash_mins_sql(8)} FROM hsh),
 banded AS ({bands}),
 cand AS (
   SELECT DISTINCT a.doc_id AS pa, b.doc_id AS pb
@@ -8862,7 +8833,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "methyl_pipeline_chain": q_methyl_pipeline_chain,
         "minhash_pairs": q_minhash_pairs,
         "minhash_recall": q_minhash_recall,
-        "minhash_recall_salted": q_minhash_recall_salted,
         "minhash_signatures": q_minhash_signatures,
         "mixture_sample": q_mixture_sample,
         "multimodal_features": q_multimodal_features,
@@ -8998,7 +8968,6 @@ def oracle_sql() -> dict[str, str]:
         "semantic_dedup": _sql_semantic_dedup(),
         "dsir_select": _sql_dsir_select(),
         "minhash_recall": _sql_minhash_recall(),
-        "minhash_recall_salted": _sql_minhash_recall("salted"),
         "two_level_recall": _sql_two_level_recall(),
         "two_level_probe": _sql_two_level_probe(),
         "two_level_adapted": _sql_two_level_adapted(),

@@ -123,71 +123,22 @@ def minhash_signatures(
     id_col: str = "doc_id",
     num_hashes: int = 16,
     shingle_n: int = 3,
-    mix: str = "linear",
 ) -> DataFrame:
     """Per-document MinHash signature. Entirely JVM-side (`transform`
     + `array_min` over the shingle array) — no UDF, no shuffle; a pure
-    map over the corpus. Two hash families:
+    map over the corpus. ONE 60-bit md5 per shingle, then ``num_hashes``
+    universal-hash mixes of it (two integer ops each). The mixes of one
+    base hash are correlated: :func:`minhash_band_recall` measured
+    mid-Jaccard band-collision rates above the independent-hash S-curve
+    (78% vs 23% theoretical at j≈0.25 on the contract fixture), so
+    recall never suffers but the verify stage sees more candidates.
 
-    - ``mix="linear"`` (default): ONE 60-bit md5 per shingle,
-      ``num_hashes`` universal-hash mixes of it (two integer ops
-      each). Cheapest per shingle, but the functions are linear mixes
-      of the SAME base hash, so they are correlated — the
-      :func:`minhash_band_recall` certificate measured band-collision
-      rates far ABOVE the independent-hash S-curve at low Jaccard
-      (78% vs 23% theoretical at j≈0.25 on the contract fixture):
-      recall never suffers, SELECTIVITY does (more false candidates
-      for the verify stage).
-    - ``mix="salted"``: one salted md5 PER FUNCTION per shingle
-      (``md5("mh{i}|" || shingle)``) — num_hashes× the hashing cost,
-      in exchange for independent functions. Measured on the same
-      fixture (minhash_recall_salted): mid-bin candidate rates drop
-      from the linear mix's 78-92% to 19-66%, bracketing the
-      1-(1-j²)⁴ theory (23/41/60/76% at bins 2-5) — the systematic
-      correlation is gone; residual deviation at the lowest bin (45%
-      vs 9%) is single-draw fluctuation, not family correlation (per-
-      function agreement measured 0.127 vs 0.022 for two functions on
-      the same j≈0.13 pairs — one fixed hash over a small shingle
-      universe fluctuates around j in both directions; the certificate
-      measures the DEPLOYED draw, which is exactly what matters).
-
-    DEFAULT RATIONALE (VERDICT r11 #2, measured r12 —
-    ``tools/scale_probe.py --minhash-family``, quiet box, medians of
-    3, 8 hashes / 4 bands): ``linear`` STAYS the default. End-to-end
-    (candidates + exact-Jaccard verify) at sf0.1: linear 3.31 s vs
-    salted 7.97 s; at 10x corpus: linear 14.55 s vs salted 29.25 s —
-    and salted's candidate set was NOT smaller on the real corpus
-    (1x: 784 vs 828; 10x: 7456 vs 6853, identical verified-pair
-    counts). The r11 per-bin certificate finding is real but only
-    pays when the corpus carries heavy MID-Jaccard (0.2-0.6) pair
-    mass for the correlated family to over-admit; this corpus (like
-    most exact-dup-pre-scrubbed crawls) has its pair mass at high J,
-    where both families recall 100% and candidate counts converge —
-    so the num_hashes x hash premium dominates and linear wins ~2x
-    end-to-end at both scales. CROSSOVER RULE: flip to
-    ``mix="salted"`` when `minhash_band_recall` on a corpus sample
-    shows mid-bin candidate rates far above theory (the r11 linear
-    signature: 78-92% vs 23-76%) AND the verify stage dominates the
-    end-to-end wall — re-measure with the probe before flipping; the
-    hash premium (measured 1.75x on the hashing stage alone) is paid
-    on every doc, the verify saving only on mid-J candidate mass.
+    Negative result (r12, 8 hashes / 4 bands, medians of 3): one salted
+    md5 per function instead (independent functions) took 7.97 s
+    end-to-end at sf0.1 against this family's 3.31 s, and its candidate
+    set was not smaller (828 pairs against 784, same verified pairs).
     """
     df = _spread(df, id_col)
-    if mix == "salted":
-        sh = shingles(text_col, shingle_n)
-
-        # factory, not a default-arg lambda (see the arity note below)
-        def salted_min(i: int):
-            return F.array_min(
-                F.transform(sh, lambda s: md5_long(s, salt=f"mh{i}"))
-            )
-
-        return df.select(
-            F.col(id_col),
-            *[salted_min(i).alias(f"mh_{i}") for i in range(num_hashes)],
-        )
-    if mix != "linear":
-        raise ValueError(f"minhash_signatures: unknown mix {mix!r}")
     hashed = df.withColumn(
         "_hs",
         F.transform(
@@ -222,7 +173,6 @@ def _minhash_bands(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    mix: str = "linear",
 ) -> DataFrame:
     """Melted LSH bands: one row per (id, band_idx, band_hash) — the
     shared banding of :func:`minhash_candidate_pairs` and the rolling
@@ -235,7 +185,7 @@ def _minhash_bands(
     """
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
-        df, text_col, id_col, num_hashes, shingle_n, mix
+        df, text_col, id_col, num_hashes, shingle_n
     ).filter(F.col("mh_0").isNotNull())
     band_cols = [
         F.md5(
@@ -262,7 +212,6 @@ def minhash_band_ledger(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    mix: str = "linear",
 ) -> DataFrame:
     """The rolling NEAR-dup ledger: distinct ``(band_idx, band_hash)``
     of everything ingested so far — the MinHash analogue of
@@ -272,7 +221,7 @@ def minhash_band_ledger(
     :func:`incremental_neardup` is co-partitioned.
     """
     return _minhash_bands(
-        df, text_col, id_col, num_hashes, bands, shingle_n, mix
+        df, text_col, id_col, num_hashes, bands, shingle_n
     ).select("band_idx", "band_hash").distinct()
 
 
@@ -284,7 +233,6 @@ def incremental_neardup(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    mix: str = "linear",
 ) -> DataFrame:
     """Rolling-ingest NEAR-dup candidate gate: per new document, how
     many of its LSH bands already exist in the corpus ledger.
@@ -304,12 +252,10 @@ def incremental_neardup(
     against a bucketed ledger — then one shard-keyed count. NULL-text
     docs are dropped (no signature), matching ``incremental_dedup``'s
     pinned contract.
+    Ledger growth (r9 probe, fixed shard): flat at 0.57-0.82 s to 100x.
     """
-    # mix MUST match the family the ledger was built with — a salted
-    # ledger probed with linear-mix bands (or vice versa) silently
-    # reports everything novel, since the band spaces are disjoint
     shard_bands = _minhash_bands(
-        new_docs, text_col, id_col, num_hashes, bands, shingle_n, mix
+        new_docs, text_col, id_col, num_hashes, bands, shingle_n
     )
     # NO defensive distinct: the ledger contract (minhash_band_ledger)
     # already guarantees unique (band_idx, band_hash) rows, and a
@@ -508,7 +454,6 @@ def minhash_candidate_pairs(
     bands: int = 4,
     shingle_n: int = 3,
     max_bucket: int = 4096,
-    mix: str = "linear",
 ) -> DataFrame:
     """LSH banding: split the signature into ``bands`` bands, hash each
     band, group same-bucket docs, and emit the within-bucket pairs
@@ -524,7 +469,7 @@ def minhash_candidate_pairs(
     LSH hygiene — the cap is the enforced backstop, not the plan.
     """
     melted = _minhash_bands(
-        df, text_col, id_col, num_hashes, bands, shingle_n, mix
+        df, text_col, id_col, num_hashes, bands, shingle_n
     )
     pairs = bucket_pair_expand(
         melted,
@@ -546,7 +491,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     num_hashes: int = 16,
     bands: int = 4,
-    mix: str = "linear",
 ) -> DataFrame:
     """Near-dup pairs with exact n-gram Jaccard similarity, verified on
     LSH candidates only (two-stage: cheap banding prunes, exact Jaccard
@@ -562,7 +506,7 @@ def ngram_jaccard_pairs(
     CORPUS while the regroup grows with the candidate set, so the
     one-scan shape is the plan that survives 100 TB.)"""
     cands = minhash_candidate_pairs(
-        df, text_col, id_col, num_hashes, bands, shingle_n, mix=mix
+        df, text_col, id_col, num_hashes, bands, shingle_n
     )
     sh = df.select(
         F.col(id_col).alias("_id"),
@@ -662,8 +606,8 @@ def line_dedup(
     (confusable map + NFC) so NBSP/zero-width/decomposed-accent
     variants of the same boilerplate line dedup together — output
     text is always the ORIGINAL lines. Measured cost of the
-    normalized key path (``tools/scale_probe.py --normalize-cost``,
-    medians of 3, local[32]): within noise at 5k docs, +8% at 50k,
+    normalized key path (r12, replicated corpus, medians of 3,
+    local[32]): within noise at 5k docs, +8% at 50k,
     **+12% at 500k** (2.92 → 3.26 s) — the Arrow NFC batch rides the
     existing line scan, so the coverage is ~free relative to the
     shuffle floor.
@@ -752,7 +696,6 @@ def minhash_band_recall(
     min_jaccard: float = 0.1,
     sample: int | None = None,
     max_bucket: int = 4096,
-    mix: str = "linear",
 ) -> DataFrame:
     """Candidate-recall certificate for the MinHash LSH banding
     (:func:`minhash_candidate_pairs`) — the measured counterpart of the
@@ -835,7 +778,7 @@ def minhash_band_recall(
     )
 
     lsh = minhash_candidate_pairs(
-        base, text_col, id_col, num_hashes, bands, shingle_n, max_bucket, mix
+        base, text_col, id_col, num_hashes, bands, shingle_n, max_bucket
     ).select(
         F.col("id_a").alias("_pa"),
         F.col("id_b").alias("_pb"),
@@ -1697,6 +1640,7 @@ def containment_pairs(
     Emits ``contained_id, container_id, containment`` with
     ``containment = |∩| / |smaller|``, ties (equal sizes) oriented by
     id. NULL-text docs drop (no shingles).
+    Dup rate 1x -> 4x (r10, 10x corpus): pairs 2,890 -> 5,680, 15.9 -> 15.5 s.
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")

@@ -931,6 +931,7 @@ def semantic_dedup(
     fitted centroids — raise it before raising k when recall is
     short. ``md5_centroids`` remains the right choice only when the
     oracle/test needs centroids derivable with NO corpus pass.
+    Growth (r10, n and k grow together): 1x 3.49 s, 10x 9.55 s, 100x 198.6 s.
     """
     from methyl_data_pipeline_spark.ext.dedup import _spread, bucket_pair_expand
     from methyl_data_pipeline_spark.ext.graph import connected_components

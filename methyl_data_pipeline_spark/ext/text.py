@@ -824,7 +824,6 @@ def unigram_logprob(
     text_col: str = "text",
     id_col: str = "doc_id",
     smoothing: float = 0.5,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Language-model quality proxy: per-document mean token log
     probability under the corpus's OWN unigram model (additively
@@ -837,13 +836,9 @@ def unigram_logprob(
 
     1. model fit: token counts (one shuffle on term) + a 2-cell total
        aggregate; log p(t) = ln((count + s) / (total + s·vocab)).
-    2. scoring: re-join the exploded tokens to the model on term, then
-       a per-doc mean (shuffle on doc).
-
-    ``broadcast_model=True`` (default) broadcasts the vocab-sized model
-    table — right for natural-language vocabularies (10⁵-10⁶ terms).
-    At open-vocab web scale (10⁸ shingles), flip it off and the score
-    join becomes a term-keyed shuffle that AQE handles.
+    2. scoring: re-join the exploded tokens to the broadcast model on
+       term (vocab-sized: 10⁵-10⁶ natural-language terms), then a
+       per-doc mean (shuffle on doc).
     """
     from methyl_data_pipeline_spark import cache
 
@@ -863,10 +858,8 @@ def unigram_logprob(
             / (F.col("total") + F.lit(smoothing) * F.col("vocab"))
         ).alias("logp"),
     )
-    if broadcast_model:
-        model = F.broadcast(model)
     return (
-        toks.join(model, "term")
+        toks.join(F.broadcast(model), "term")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
@@ -881,7 +874,6 @@ def bigram_logprob(
     id_col: str = "doc_id",
     smoothing: float = 0.5,
     interp: float = 0.7,
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Interpolated-bigram LM quality score (VERDICT r12 #8 — CCNet's
     actual LM filter is an n-gram LM, Wenzek et al. 2020; this is the
@@ -901,19 +893,17 @@ def bigram_logprob(
     self-join), persisted (three consumers: unigram fit, bigram fit,
     scoring). Model fits are one shuffle each on term / (prev, cur) /
     prev — all vocabulary-bounded. Scoring re-joins the stream to the
-    three model tables (broadcast for natural-language vocabularies;
-    ``broadcast_model=False`` flips to AQE shuffle joins at open-vocab
-    web scale) and ends in the per-doc mean. Every scored bigram was
-    seen in the fit (self-scoring), so the ML bigram term is never
-    0/0; interpolation still smooths rare-context estimates.
+    three broadcast model tables (natural-language vocabularies) and
+    ends in the per-doc mean. Every scored bigram was seen in the fit
+    (self-scoring), so the ML bigram term is never 0/0; interpolation
+    still smooths rare-context estimates.
 
     Output: ``(id_col, n_tokens, mean_logprob)`` per non-NULL-text
     doc. Tokenization follows :func:`words` (the ``unigram_logprob``
     contract, including the empty-string token of whitespace-only
-    docs). Growth probe (``tools/scale_probe.py --lm-growth``,
-    scrambled replicas = worst-case near-unique bigram vocabulary,
-    medians of 3, local[32]): 5k docs 1.12 s -> 50k docs 1.64 s —
-    **1.5x wall at 10x corpus**.
+    docs). Growth probe (r13, scrambled replicas = worst-case
+    near-unique bigram vocabulary, medians of 3, local[32]): 5k docs
+    1.12 s -> 50k docs 1.64 s — **1.5x wall at 10x corpus**.
     """
     from methyl_data_pipeline_spark import cache
 
@@ -956,13 +946,11 @@ def bigram_logprob(
         .agg(F.count(F.lit(1)).alias("_cb"))
     )
     ctx = big.groupBy("prev").agg(F.sum("_cb").alias("_cc"))
-    if broadcast_model:
-        uni_p, big, ctx = F.broadcast(uni_p), F.broadcast(big), F.broadcast(ctx)
     lam = F.lit(float(interp))
     scored = (
-        stream.join(uni_p, "cur")
-        .join(big, ["prev", "cur"], "left")
-        .join(ctx, "prev", "left")
+        stream.join(F.broadcast(uni_p), "cur")
+        .join(F.broadcast(big), ["prev", "cur"], "left")
+        .join(F.broadcast(ctx), "prev", "left")
         .select(
             id_col,
             F.log(
@@ -1178,7 +1166,6 @@ def heavy_hitters(
     text_col: str = "text",
     ngram_n: int = 3,
     min_share: float = 0.002,
-    prefilter: bool = True,
 ) -> DataFrame:
     """Corpus-level hot n-grams: word ``ngram_n``-grams whose share of
     ALL n-gram occurrences is at least ``min_share`` — the boilerplate
@@ -1189,16 +1176,16 @@ def heavy_hitters(
     The naive exact plan shuffles the full exploded gram stream — and
     since most grams are near-unique, map-side partial aggregation
     collapses almost nothing, so at corpus scale the shuffle IS the
-    gram stream. ``prefilter=True`` (default) first runs the one-pass
-    ``freqItems`` sketch (no shuffle, bounded memory), whose guarantee
-    is a SUPERSET of every gram with share > ``min_share``; the exact
-    count pass then only shuffles occurrences of the ≤1/min_share
-    candidates. The result is IDENTICAL to the naive plan (the sketch
-    cannot miss a true hitter; false candidates die on the exact share
-    filter) — only the shuffle shrinks from the gram stream to the hot
-    tail. The denominator still counts every gram (a 1-row map-side
-    aggregate). Returns (gram, n_occurrences, share), share ≥
-    min_share, descending.
+    gram stream. So this plan first runs the one-pass ``freqItems``
+    sketch (no shuffle, bounded memory), whose guarantee is a SUPERSET
+    of every gram with share > ``min_share``; the exact count pass then
+    only shuffles occurrences of the ≤1/min_share candidates. The
+    result is IDENTICAL to the naive plan (the sketch cannot miss a
+    true hitter; false candidates die on the exact share filter) — only
+    the shuffle shrinks from the gram stream to the hot tail. The
+    denominator still counts every gram (a 1-row map-side aggregate).
+    Below freqItems' support floor the naive plan runs. Returns (gram,
+    n_occurrences, share), share ≥ min_share, descending.
     """
     from methyl_data_pipeline_spark import cache
     from methyl_data_pipeline_spark.ext.dedup import shingles, shingles_from_words
@@ -1217,7 +1204,7 @@ def heavy_hitters(
     # margined sketch cannot express the guarantee, so fall back to
     # the naive exact shuffle rather than silently lose true hitters.
     support = min_share * 0.9
-    if prefilter and support >= 1e-4:
+    if support >= 1e-4:
         # materialize the normalized word arrays ONCE: the sketch
         # pass, the exact candidate count, and the denominator all
         # read this projection — without the persist each re-runs the
@@ -1695,8 +1682,7 @@ def train_quality_weights(
     # persisted: bounded by ``buckets`` (<= ~10^3 rows) and consumed by
     # THREE branches (weights, gram totals, via totals the bias row) —
     # without it the lazy DAG recomputes the corpus-sized gram explode
-    # per branch (measured r13 on the 10x replica via
-    # tools/scale_probe.py --lm-growth: 18.3 s three-pass -> 1.84 s
+    # per branch (measured r13 on the 10x replica: 18.3 s three-pass -> 1.84 s
     # single-pass, i.e. 1.5x wall at 10x corpus)
     per_bucket = cache.track(
         feats.groupBy("_b").agg(
@@ -2271,8 +2257,8 @@ def bpe_merges(
     at scale, and at bench scale the k per-round jobs dominate — a
     doc-keyed spread measured SLOWER (4.96 -> 5.34 s at sf0.1, k=8,
     medians of 3: the extra corpus shuffle costs more than the
-    single-partition tokenize it parallelizes). Growth probe
-    (`tools/scale_probe.py --bpe-growth`): 2.5x wall at 100x corpus
+    single-partition tokenize it parallelizes). Growth probe (r11,
+    replicated corpus): 2.5x wall at 100x corpus
     with worst-case linear vocab growth.
 
     Words are whitespace tokens of lowercased text (:func:`words`)

@@ -104,66 +104,12 @@ def _centered(long_df: DataFrame, value_col: str, key_col: str, sample_col: str,
 def _normalize_signs(scores) -> None:
     """In-place per-component sign normalization: first sample's (row
     order = sorted sample ids) nonzero score is non-negative —
-    deterministic across partitionings, BLAS builds, and solver paths."""
+    deterministic across partitionings and BLAS builds."""
     for j in range(scores.shape[1]):
         col = scores[:, j]
         pivot = next((x for x in col if abs(x) > 1e-12), 1.0)
         if pivot < 0:
             scores[:, j] = -col
-
-
-def _pca_scores_distributed(
-    centered: DataFrame, k: int, sample_col: str, key_col: str
-) -> tuple[DataFrame, list[float]]:
-    """The large-n path: distributed truncated SVD of the centered
-    (samples × probes) matrix via IndexedRowMatrix.computeSVD.
-
-    Spark's ARPACK "dist-eigs" mode iterates Gramian mat-vec products
-    across the cluster — it never materializes the d×d covariance
-    (ml.feature.PCA does, infeasible at d = 10⁵-10⁶ probes) nor the
-    n×n Gram (the driver-side trick, quadratic in samples). Driver
-    memory is O(d·k) ARPACK workspace; every data-sized structure
-    stays distributed. Scores U·S come back as a distributed indexed
-    matrix — nothing n²-sized ever reaches the driver.
-    """
-    import numpy as np
-    from pyspark.mllib.linalg import Vectors
-    from pyspark.mllib.linalg.distributed import IndexedRow, IndexedRowMatrix
-
-    spark = centered.sparkSession
-    # stable sample index (driver-side list of ids only — O(n) strings)
-    sample_ids = [
-        r[0] for r in centered.select(sample_col).distinct().orderBy(sample_col).collect()
-    ]
-    n = len(sample_ids)
-    k_eff = min(k, n - 1 if n > 1 else 1)
-    sid_to_idx = {s: i for i, s in enumerate(sample_ids)}
-
-    # total variance = trace of the Gram matrix = Σ centered² (one agg)
-    total_var = centered.agg(F.sum(F.pow(F.col("_vc"), 2))).collect()[0][0] or 1.0
-
-    vecs = assemble_sample_vectors(
-        centered, value_col="_vc", key_col=key_col, sample_col=sample_col
-    )
-    b_idx = spark.sparkContext.broadcast(sid_to_idx)
-    indexed = vecs.rdd.map(
-        lambda r: IndexedRow(b_idx.value[r[0]], Vectors.dense(r[1].toArray()))
-    )
-    svd = IndexedRowMatrix(indexed).computeSVD(k_eff, computeU=True)
-    s = svd.s.toArray()
-    u_rows = svd.U.rows.map(lambda r: (int(r.index), r.vector.toArray())).collect()
-
-    scores = np.zeros((n, k_eff))
-    for i, vec in u_rows:
-        scores[i, :] = vec * s
-    _normalize_signs(scores)
-    ev = [float(sv * sv) / float(total_var) for sv in s]
-    rows = [
-        (sid, *[float(scores[i, j]) for j in range(k_eff)])
-        for i, sid in enumerate(sample_ids)
-    ]
-    out = spark.createDataFrame(rows, [sample_col] + [f"PC{j + 1}" for j in range(k_eff)])
-    return out, ev
 
 
 def gram_matrix(
@@ -311,9 +257,9 @@ def blocked_crossprod(
 
 
 def _gram_eigensolve(gram_rows):
-    """Collect-side eigensolve shared by :func:`pca_scores` (small-n
-    path) and :func:`pca_eigen_certificate` — the certificate's claim
-    is that it runs the EXACT decomposition the scores path runs, so
+    """Collect-side eigensolve shared by :func:`pca_scores` and
+    :func:`pca_eigen_certificate` — the certificate's claim is that it
+    runs the EXACT decomposition the scores path runs, so
     the block must not fork. Returns (samples, kmat, eigvals_desc,
     eigvecs_desc)."""
     import numpy as np
@@ -381,43 +327,24 @@ def pca_scores(
     scale: bool = False,
     key_col: str = "probe_id",
     sample_col: str = "sample_id",
-    gram_threshold: int = 1024,
 ) -> tuple[DataFrame, list[float]]:
     """Per-sample PCA scores (PC1..PCk) + explained-variance ratios.
 
-    Two physical strategies behind one result contract (parity-tested):
-
-    - ``n_samples <= gram_threshold``: the n×n Gram trick — one
-      probe-keyed self-join shuffle, tiny K eigendecomposed driver-side.
-      Exact, and the right call at the reference's n = 10²-10³. It
-      runs :func:`gram_matrix`, the plan the oracle-checked
-      ``pca_gram`` query pins; :func:`gram_matrix_blocked` (the
-      mapInPandas partial-XᵀX plan, O(data) instead of O(probes·n²)
-      shuffle) computes the same matrix and is tested for parity.
-    - above the threshold: distributed truncated SVD
-      (:func:`_pca_scores_distributed`) — no n² collect, no d×d
-      covariance; survives n = 10⁵ samples × d = 10⁶ probes.
+    One strategy, the n×n Gram trick: :func:`gram_matrix` builds the
+    upper triangle of K in one probe-keyed self-join shuffle (the plan
+    the oracle-checked ``pca_gram`` query pins), the n(n+1)/2 cells are
+    collected, and K is mirrored and eigendecomposed driver-side by
+    :func:`_gram_eigensolve`. Exact, and the right call at the
+    reference's n = 10²-10³ samples (134 in ``workflow.R``).
 
     ``scale=False`` = prcomp parity (center only, workflow.R:218);
     ``scale=True`` = sklearn/StandardScaler parity
     (analysis/pca_analysis.py:37-41). Component sign is normalized so
     the lexicographically-smallest sample has a non-negative score —
-    deterministic across partitionings, solver paths, and BLAS builds.
+    deterministic across partitionings and BLAS builds.
     """
     import numpy as np
 
-    # strategy pick: the SAMPLE-dimension cardinality — counted on the
-    # raw frame, not on the centered plan, which would execute the full
-    # per-probe-stats join once just to pick a branch (the Gram path
-    # re-derives the centering internally anyway)
-    n_samples = long_df.select(sample_col).distinct().count()
-    if n_samples > gram_threshold:
-        centered = _centered(long_df, value_col, key_col, sample_col, scale)
-        return _pca_scores_distributed(centered, k, sample_col, key_col)
-    # Gram matrix: one shuffle on the probe key; n(n+1)/2 output cells
-    # (upper triangle — K is symmetric, mirror driver-side). Shares
-    # gram_matrix so the oracle-checked contract query exercises the
-    # exact plan this path runs.
     gram_rows = gram_matrix(
         long_df, value_col=value_col, key_col=key_col,
         sample_col=sample_col, scale=scale,
@@ -448,7 +375,6 @@ def mds_coords(
     value_col: str = "mval",
     key_col: str = "probe_id",
     sample_col: str = "sample_id",
-    gram_threshold: int = 1024,
 ) -> DataFrame:
     """PCA variant C (reference M1: ``Mouse_Microarray_General_Workflow
     .R:69-73`` — limma ``plotMDS`` on the top-``ntop``-variance probes,
@@ -474,19 +400,6 @@ def mds_coords(
         .select(key_col)
     )
     sub = long_df.join(F.broadcast(var_top), key_col)
-    if n_samples > gram_threshold:
-        # Classical MDS on *Euclidean* distances is exactly PCA on the
-        # per-probe-centered submatrix (Torgerson's B equals the Gram
-        # matrix of centered data), so the large-n case routes to the
-        # distributed SVD — no n² distance collect. Renaming MDSj keeps
-        # the output contract.
-        centered_sub = _centered(sub, value_col, key_col, sample_col, scale=False)
-        out, _ = _pca_scores_distributed(centered_sub, k, sample_col, key_col)
-        renames = [F.col(sample_col)] + [
-            F.col(f"PC{j + 1}").alias(f"MDS{j + 1}")
-            for j in range(len(out.columns) - 1)
-        ]
-        return out.select(*renames)
     a = sub.select(key_col, F.col(sample_col).alias("_s1"), F.col(value_col).alias("_v1"))
     b = sub.select(key_col, F.col(sample_col).alias("_s2"), F.col(value_col).alias("_v2"))
     d2_rows = (

@@ -44,31 +44,21 @@ def quantile_normalize(
     sample_col: str = "sample_id",
     value_col: str = "beta",
     out_col: str = "beta_qn",
-    broadcast_reference: bool = True,
-    persist_ranked: bool = True,
 ) -> DataFrame:
     """Replace ``value_col`` with the cross-sample mean of its
     within-sample rank. Returns ``key_col, sample_col, out_col`` plus
     the source row's other columns, minus the raw value.
 
-    ``broadcast_reference=False`` falls back to a shuffle join for the
-    rank→mean map — only needed if n_keys is too large to broadcast
-    (≫10⁷), at which point the reference profile itself is the
-    bottleneck and QN should be done on a feature subset.
-
-    ``persist_ranked``: the ranked frame feeds BOTH the reference-
-    profile aggregate and the map-back join; without persistence the
-    per-sample rank window (shuffle + sort of the full fact table) runs
-    twice — Spark's ReusedExchange shares the shuffle but not the sort.
-    Registered with ``cache`` for tracked release.
+    The rank→mean map is broadcast: it has n_keys rows (≤10⁶ probes).
+    The ranked frame is persisted (tracked in ``cache``): it feeds
+    BOTH the reference-profile aggregate and the map-back join, and
+    uncached the per-sample rank window (shuffle + sort of the full
+    fact table) runs twice — ReusedExchange shares the shuffle but not
+    the sort.
     """
     w = Window.partitionBy(sample_col).orderBy(
         F.col(value_col).asc(), F.col(key_col).asc()
     )
-    ranked = df.withColumn("_qn_rank", F.row_number().over(w))
-    if persist_ranked:
-        ranked = cache.track(ranked)
+    ranked = cache.track(df.withColumn("_qn_rank", F.row_number().over(w)))
     ref = ranked.groupBy("_qn_rank").agg(F.avg(value_col).alias(out_col))
-    if broadcast_reference:
-        ref = F.broadcast(ref)
-    return ranked.join(ref, "_qn_rank").drop("_qn_rank", value_col)
+    return ranked.join(F.broadcast(ref), "_qn_rank").drop("_qn_rank", value_col)

@@ -7,32 +7,18 @@ standard deviations from the per-group median, where the robust sd is
 1.4826·MAD (the normal-consistency constant). Median/MAD resist the
 very outliers being hunted, unlike mean/stddev gates.
 
-Scale shape: the exact path computes two per-group ``percentile``
-aggregates (each a sort-based agg with map-side partial collection —
-fine while group cardinality is modest, e.g. QC plates or event
-types); ``approx=True`` switches both medians to
-``approx_percentile`` (t-digest sketch, mergeable, no per-group sort)
-— the 100 TB path where groups hold billions of rows. Flags then
-evaluate JVM-side with no further shuffle.
+Scale shape: two exact per-group ``percentile`` window aggregates over
+one group-keyed shuffle — fine while group cardinality is modest (QC
+plates, event types). Flags then evaluate JVM-side with no further
+shuffle.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 # normal-consistency constant: 1/Phi^-1(3/4)
 MAD_K = 1.4826
-
-
-def group_median(df: DataFrame, value_col: str, group_cols: list[str],
-                 out_col: str, approx: bool = False,
-                 accuracy: int = 10_000) -> DataFrame:
-    expr = (
-        f"approx_percentile({value_col}, 0.5, {accuracy})"
-        if approx
-        else f"percentile({value_col}, 0.5)"
-    )
-    return df.groupBy(*group_cols).agg(F.expr(expr).alias(out_col))
 
 
 def mad_outliers(
@@ -40,7 +26,6 @@ def mad_outliers(
     value_col: str = "value",
     group_cols: list[str] | tuple[str, ...] = ("event_type",),
     c: float = 3.0,
-    approx: bool = False,
 ) -> DataFrame:
     """Per-row outlier flags: ``is_outlier`` iff
     |value − median| > c · 1.4826 · MAD within the row's group.
@@ -49,39 +34,20 @@ def mad_outliers(
     ``robust_z`` (0 when MAD is 0 — degenerate constant groups never
     flag) and ``is_outlier``.
 
-    Plan by path: the EXACT path runs both percentiles as window
-    aggregates over one group-keyed shuffle (two WindowExec passes,
-    one Exchange, one scan) — exact ``percentile`` partials carry the
-    full value list per group anyway, so the old two-agg + two-join
-    form shuffled the same data twice and scanned the fact four times
-    for no gain. The APPROX path keeps the agg + broadcast-join shape:
-    ``approx_percentile`` partials are mergeable t-digest sketches, so
-    there the fact is map-combined and never shuffled — the 100 TB
-    shape. Identical values either way (percentile is sort-based on
-    the group multiset; no summation-order sensitivity).
+    Plan: both percentiles run as window aggregates over one
+    group-keyed shuffle (two WindowExec passes, one Exchange, one
+    scan) — exact ``percentile`` partials carry the full value list per
+    group anyway, so a two-agg + two-join form shuffled the same data
+    twice and scanned the fact four times for no gain.
     """
-    gcols = list(group_cols)
-    if not approx:
-        from pyspark.sql import Window
-
-        w = Window.partitionBy(*gcols)
-        med_col = F.expr(f"percentile({value_col}, 0.5)").over(w)
-        with_med = df.withColumn("grp_median", med_col).withColumn(
-            "_adev", F.abs(F.col(value_col) - F.col("grp_median"))
-        )
-        out = with_med.withColumn(
-            "grp_mad", F.expr("percentile(_adev, 0.5)").over(w)
-        ).drop("_adev")
-    else:
-        med = group_median(df, value_col, gcols, "grp_median", approx)
-        with_med = df.join(F.broadcast(med), gcols)
-        mad = group_median(
-            with_med.withColumn(
-                "_adev", F.abs(F.col(value_col) - F.col("grp_median"))
-            ),
-            "_adev", gcols, "grp_mad", approx,
-        )
-        out = with_med.join(F.broadcast(mad), gcols)
+    w = Window.partitionBy(*group_cols)
+    med_col = F.expr(f"percentile({value_col}, 0.5)").over(w)
+    with_med = df.withColumn("grp_median", med_col).withColumn(
+        "_adev", F.abs(F.col(value_col) - F.col("grp_median"))
+    )
+    out = with_med.withColumn(
+        "grp_mad", F.expr("percentile(_adev, 0.5)").over(w)
+    ).drop("_adev")
     robust_z = F.when(
         F.col("grp_mad") > 0,
         F.abs(F.col(value_col) - F.col("grp_median")) / (MAD_K * F.col("grp_mad")),
@@ -96,11 +62,10 @@ def mad_outlier_summary(
     value_col: str = "value",
     group_cols: list[str] | tuple[str, ...] = ("event_type",),
     c: float = 3.0,
-    approx: bool = False,
 ) -> DataFrame:
     """Per-group robust-QC report: n, median, MAD, outlier count/rate."""
     gcols = list(group_cols)
-    flagged = mad_outliers(df, value_col, gcols, c, approx)
+    flagged = mad_outliers(df, value_col, gcols, c)
     return flagged.groupBy(*gcols).agg(
         F.count(F.lit(1)).alias("n"),
         F.first("grp_median").alias("grp_median"),

@@ -206,11 +206,10 @@ def test_mds_coords_match_numpy(spark):
         assert min(np.max(np.abs(col - ref)), np.max(np.abs(col + ref))) < 1e-6
 
 
-def test_pca_paths_parity(spark):
-    """The Gram-trick path (small n) and the distributed-SVD path
-    (large n) must produce the same scores and explained variance —
-    the gram_threshold switch is a physical-plan choice, not a
-    semantic one."""
+def test_pca_scores_runs_no_sample_count(spark, monkeypatch):
+    """pca_scores takes the sample count from the collected Gram cells:
+    it must run no ``DataFrame.count`` action of its own (a separate
+    ``distinct().count()`` job only ever picked between solver paths)."""
     rng = np.random.RandomState(7)
     n_probes, n_samples = 40, 10
     x = rng.normal(0, 1, size=(n_probes, n_samples))
@@ -222,15 +221,22 @@ def test_pca_paths_parity(spark):
     ]
     df = spark.createDataFrame(rows, ["probe_id", "sample_id", "mval"])
 
-    gram, ev_gram = pca_scores(df, k=3, value_col="mval", gram_threshold=1024)
-    dist, ev_dist = pca_scores(df, k=3, value_col="mval", gram_threshold=1)
+    def no_count(self):
+        raise AssertionError("pca_scores ran a DataFrame.count action")
 
-    g = gram.toPandas().set_index("sample_id").sort_index()
-    d = dist.toPandas().set_index("sample_id").sort_index()
-    assert list(g.columns) == list(d.columns)
-    for c in g.columns:
-        assert np.max(np.abs(g[c].values - d[c].values)) < 1e-6
-    assert np.allclose(ev_gram, ev_dist, atol=1e-9)
+    # the concrete class: Spark 4's classic DataFrame overrides count
+    monkeypatch.setattr(type(df), "count", no_count)
+    scores, ev = pca_scores(df, k=3, value_col="mval")
+    got = scores.toPandas().set_index("sample_id").sort_index()
+
+    xt = x.T - x.T.mean(axis=0)
+    u, s, _vt = np.linalg.svd(xt, full_matrices=False)
+    pcs = u * s
+    for i in range(3):
+        col = got[f"PC{i+1}"].values
+        ref = pcs[:, i]
+        assert min(np.max(np.abs(col - ref)), np.max(np.abs(col + ref))) < 1e-6
+    assert np.allclose(ev, (s[:3] ** 2) / (s ** 2).sum(), atol=1e-9)
 
 
 def test_blocked_crossprod_ragged_key_hard_error(spark):
@@ -280,31 +286,6 @@ def test_gram_matrix_blocked_matches_exact(spark):
     assert set(exact) == set(blocked)
     for k in exact:
         assert abs(exact[k] - blocked[k]) < 1e-9 * max(1.0, abs(exact[k]))
-
-
-def test_mds_paths_parity(spark):
-    """Torgerson MDS (n² distance collect) and the distributed-SVD
-    route must agree: classical MDS on Euclidean distances IS PCA on
-    the centered submatrix."""
-    from methyl_data_pipeline_spark.stats.pca import mds_coords
-
-    rng = np.random.RandomState(13)
-    n_probes, n_samples = 50, 8
-    x = rng.normal(0, 1, size=(n_probes, n_samples))
-    x[:12, :4] += 1.2
-    rows = [
-        (f"cg{p:05d}", f"s{s:02d}", float(x[p, s]))
-        for p in range(n_probes)
-        for s in range(n_samples)
-    ]
-    df = spark.createDataFrame(rows, ["probe_id", "sample_id", "mval"])
-    small = mds_coords(df, k=2, ntop=30, gram_threshold=1024).toPandas()
-    large = mds_coords(df, k=2, ntop=30, gram_threshold=1).toPandas()
-    s = small.set_index("sample_id").sort_index()
-    l = large.set_index("sample_id").sort_index()
-    assert list(s.columns) == list(l.columns)
-    for c in s.columns:
-        assert np.max(np.abs(s[c].values - l[c].values)) < 1e-6
 
 
 def test_beta_mle_weighted_recovers_parameters():

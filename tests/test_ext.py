@@ -688,15 +688,14 @@ def test_unigram_logprob_hand_computed(spark):
         1: (3, (2 * lp["a"] + lp["b"]) / 3),
         2: (2, (lp["b"] + lp["c"]) / 2),
     }
-    for broadcast_model in (True, False):
-        got = {
-            r["doc_id"]: (r["n_tokens"], r["mean_logprob"])
-            for r in unigram_logprob(docs, broadcast_model=broadcast_model).collect()
-        }
-        assert set(got) == set(want)
-        for d, (n, m) in want.items():
-            assert got[d][0] == n
-            assert abs(got[d][1] - m) < 1e-12
+    got = {
+        r["doc_id"]: (r["n_tokens"], r["mean_logprob"])
+        for r in unigram_logprob(docs).collect()
+    }
+    assert set(got) == set(want)
+    for d, (n, m) in want.items():
+        assert got[d][0] == n
+        assert abs(got[d][1] - m) < 1e-12
 
 
 def test_segment_dedup_removes_repeats(spark):
@@ -1315,24 +1314,6 @@ def test_mad_outliers_flags_planted_spikes(spark):
     summ = mad_outlier_summary(df, "value", ["event_type"], c=3.0).toPandas()
     row = summ[summ.event_type == "a"].iloc[0]
     assert row.n == 103 and row.n_outliers == 3
-
-
-def test_mad_exact_vs_approx_agree_on_separated_data(spark):
-    """The t-digest scale path flags the same rows as the exact path
-    when outliers are well separated (the regime that matters)."""
-    import pandas as pd
-    import numpy as np
-
-    from methyl_data_pipeline_spark.stats.robust import mad_outliers
-
-    rng = np.random.RandomState(0)
-    vals = list(rng.normal(50, 2, 500)) + [5000.0, -3000.0]
-    pdf = pd.DataFrame({"event_type": ["x"] * 502, "value": vals})
-    df = spark.createDataFrame(pdf)
-    exact = mad_outliers(df, "value", ["event_type"], c=4.0).toPandas()
-    approx = mad_outliers(df, "value", ["event_type"], c=4.0, approx=True).toPandas()
-    key = lambda f: set(f[f.is_outlier].value.round(6))
-    assert key(exact) == key(approx) == {5000.0, -3000.0}
 
 
 def test_heavy_hitters_finds_planted_boilerplate(spark):
@@ -2640,77 +2621,6 @@ def test_train_quality_weights_separates_and_beats_md5(spark):
     )
     b2 = w_all2.filter("bucket = -1").collect()[0].weight
     assert abs(b2 - round(math.log(12 / 6) + 1e-9, 6)) < 1e-9
-
-
-def test_minhash_salted_mix_family(spark):
-    """The salted (independent per-function md5) family produces valid
-    signatures and candidate pairs: identical docs always collide,
-    disjoint docs never do, and the family genuinely differs from the
-    linear mix (different signature values)."""
-    from methyl_data_pipeline_spark.ext.dedup import (
-        minhash_candidate_pairs,
-        minhash_signatures,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = [
-        (0, base),
-        (1, base),  # exact dup
-        (2, "completely different words nothing shared here at all ok"),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    lin = minhash_signatures(df, num_hashes=8).orderBy("doc_id").collect()
-    sal = minhash_signatures(df, num_hashes=8, mix="salted").orderBy(
-        "doc_id"
-    ).collect()
-    # identical docs -> identical signatures in BOTH families
-    for sigs in (lin, sal):
-        assert tuple(sigs[0])[1:] == tuple(sigs[1])[1:]
-        assert sigs[3]["mh_0"] is None  # NULL text
-    # the families are different hash draws
-    assert tuple(lin[0])[1:] != tuple(sal[0])[1:]
-
-    pairs = {
-        tuple(r)
-        for r in minhash_candidate_pairs(
-            df, num_hashes=8, bands=4, mix="salted"
-        ).collect()
-    }
-    assert (0, 1) in pairs and (0, 2) not in pairs
-
-    with pytest.raises(ValueError, match="unknown mix"):
-        minhash_signatures(df, mix="nope")
-
-
-def test_incremental_neardup_salted_family_consistency(spark):
-    """A salted ledger probed with salted shard bands detects the dup;
-    probing it with the default linear family would put shard and
-    ledger in disjoint band spaces (everything 'novel')."""
-    from methyl_data_pipeline_spark.ext.dedup import (
-        incremental_neardup,
-        minhash_band_ledger,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    corpus = spark.createDataFrame([(0, base)], "doc_id long, text string")
-    shard = spark.createDataFrame(
-        [(1, base), (2, "completely unrelated fresh content words here now")],
-        "doc_id long, text string",
-    )
-    ledger = minhash_band_ledger(corpus, mix="salted")
-    hits = {
-        r.doc_id: (r.n_band_hits, r.is_novel)
-        for r in incremental_neardup(shard, ledger, mix="salted").collect()
-    }
-    assert hits[1][1] is False and hits[1][0] > 0  # dup detected
-    assert hits[2][1] is True  # novel doc passes
-
-    mismatched = {
-        r.doc_id: r.is_novel
-        for r in incremental_neardup(shard, ledger).collect()  # linear probe
-    }
-    assert mismatched[1] is True  # the documented cross-family hazard
 
 
 def _ahash_formula(doc_id: int) -> int:

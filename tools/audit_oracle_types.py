@@ -26,9 +26,10 @@ check_oracle.py / plans.py.
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",

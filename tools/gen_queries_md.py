@@ -14,7 +14,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def first_sentence(doc: str | None) -> str:
@@ -33,7 +34,7 @@ def green_rounds() -> tuple[dict[str, list[int]], dict[str, list[int]]]:
     and rounds recorded red/errored while in the window."""
     greens: dict[str, list[int]] = {}
     reds: dict[str, list[int]] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
         m = re.search(r"_r(\d+)\.json$", path)
         if not m:
             continue
@@ -99,7 +100,7 @@ def main() -> None:
         "(each needs a window slot; see the rotation comments in "
         "`queries()`).",
     ]
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(qs)} queries, {n_never} oracled-but-ungreen)")
 

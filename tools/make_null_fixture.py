@@ -1,4 +1,4 @@
-"""Build the NULL-bearing oracle fixture at /root/repo/.nullfix.
+"""Build the NULL-bearing oracle fixture at ``.nullfix`` in the checkout.
 
 Copies the sf0.001 testdata and injects NULL text, NULL lang, empty
 text, and whitespace-only text into the documents table — the data
@@ -7,7 +7,7 @@ shapes that exposed the round-6 cross-engine divergences (F.size(NULL)
 NULL-skipping). Run the full battery against it with:
 
     python tools/make_null_fixture.py
-    python tools/check_oracle.py --sf-dir /root/repo/.nullfix
+    python tools/check_oracle.py --sf-dir .nullfix
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 SRC = os.environ.get("SPARK_GRAFT_NULLFIX_SRC", "/root/testdata/sf0.001")
-DST = "/root/repo/.nullfix"
+DST = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".nullfix")
 
 
 def main() -> None:

@@ -92,7 +92,11 @@ def summary_block(name: str, plan: str) -> list[str]:
     for ln in plan.splitlines():
         t = ln.strip(" :+-*")
         if any(k in t for k in INTERESTING):
+            # strip the ids that change run to run: expression ids,
+            # exchange plan ids, lambda-variable counters
             t = re.sub(r"#\d+L?", "", t)
+            t = re.sub(r",? \[plan_id=\d+\]", "", t)
+            t = re.sub(r"(lambda [A-Za-z]+)_\d+", r"\1", t)
             picked.append(t[:140])
     n_shuffles = sum("Exchange" in p and "Broadcast" not in p for p in picked)
     n_bcast = sum("BroadcastHashJoin" in p for p in picked)

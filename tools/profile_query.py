@@ -1,31 +1,40 @@
-"""Per-query job/stage profiler (optimization rounds).
+"""Per-query profiler: wall time, scheduling counts and stage hotspots.
 
-Runs named queries once (after warmup) in a UI-enabled session and
-reports, per query: wall seconds, number of Spark jobs, number of
-stages, and total task time — fetched from the live UI REST API. At
-bench scale (sf0.1, tiny files) wall time is dominated by fixed
-per-job/per-stage overheads, so job count is the first thing to cut
-(the r13 methyl_pipeline_chain fix: 27 jobs of AQE barriers → 3.2 s
-median from 4.8 s).
+Runs each named registry query once untimed (warm-up), then ``--runs``
+timed runs in one UI-enabled session. Each run computes every column
+of the result through a ``noop`` write (``count()`` lets Catalyst
+prune work the result needs), and tracked caches are released between
+runs. Per query it prints the median, min and max wall time; then the
+jobs, stages and tasks of the median run, read from the live UI REST
+API; then that run's ``--top`` stages by executor run time — the fast
+way to spot a serialized stage (one task doing seconds of work below
+an Exchange) or a shuffle-heavy one. At bench scale wall time is
+dominated by fixed per-job overheads, so job count is the first thing
+to cut (r13: 27 AQE-barrier jobs cut from methyl_pipeline_chain took
+its median from 4.8 to 3.2 s).
 
-Usage: python tools/profile_query.py [--sf-dir DIR] query [query ...]
+Usage: python tools/profile_query.py --sf-dir DIR [--runs N] [--top K]
+       query [query ...]
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
+import statistics
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--runs", type=int, default=1)
+    ap.add_argument("--sf-dir", required=True)
+    ap.add_argument("--runs", type=int, default=3)
+    ap.add_argument("--top", type=int, default=4)
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
@@ -37,52 +46,54 @@ def main() -> int:
         "profile", extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "4047"}
     )
     sc = spark.sparkContext
-    ui = sc.uiWebUrl
-    app_id = sc.applicationId
+    api = f"{sc.uiWebUrl}/api/v1/applications/{sc.applicationId}"
     qs = entrymod.queries()
 
     def rest(path: str):
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/{path}") as r:
+        with urllib.request.urlopen(f"{api}/{path}") as r:
             return json.load(r)
 
-    # warmup: JIT the plans at sf0.001, touch target files
-    warm = "/root/testdata/sf0.001"
-    for name in args.names:
-        try:
-            qs[name](spark, warm).count()
-            cache.release_all()
-        except Exception as exc:
-            print(f"# warmup {name} failed: {exc}", file=sys.stderr)
-    import glob as _glob
-    import os as _os
+    def run(name: str) -> float:
+        t0 = time.time()
+        qs[name](spark, args.sf_dir).write.format("noop").mode("overwrite").save()
+        wall = time.time() - t0
+        cache.release_all()
+        return wall
 
-    for p in sorted(_glob.glob(_os.path.join(args.sf_dir, "*.parquet"))):
-        spark.read.parquet(p).limit(1).count()
-
-    out = {}
     for name in args.names:
-        best = None
+        run(name)
+        recs = []
         for _ in range(args.runs):
-            before = {j["jobId"] for j in rest("jobs")}
-            t0 = time.time()
-            n = qs[name](spark, args.sf_dir).count()
-            wall = time.time() - t0
-            cache.release_all()
-            jobs = [j for j in rest("jobs") if j["jobId"] not in before]
-            stages = sum(j["numTasks"] > 0 for j in jobs)
-            n_stages = sum(len(j["stageIds"]) for j in jobs)
-            n_tasks = sum(j["numTasks"] for j in jobs)
-            rec = {
-                "wall_s": round(wall, 3),
-                "rows": n,
-                "jobs": len(jobs),
-                "stages": n_stages,
-                "tasks": n_tasks,
-            }
-            if best is None or rec["wall_s"] < best["wall_s"]:
-                best = rec
-        out[name] = best
-        print(f"{name}: {json.dumps(best)}", flush=True)
+            jobs0 = {j["jobId"] for j in rest("jobs")}
+            stages0 = {s["stageId"] for s in rest("stages?status=complete")}
+            wall = run(name)
+            # the UI store trails the listener bus: wait out running jobs
+            while any(j["status"] == "RUNNING" for j in rest("jobs")):
+                time.sleep(0.1)
+            jobs = [j for j in rest("jobs") if j["jobId"] not in jobs0]
+            stages = [
+                s for s in rest("stages?status=complete")
+                if s["stageId"] not in stages0
+            ]
+            recs.append((wall, len(jobs), stages))
+        walls = [r[0] for r in recs]
+        wall, n_jobs, stages = sorted(recs, key=lambda r: r[0])[len(recs) // 2]
+        print(
+            f"\n{name}: median {statistics.median(walls):.3f}s "
+            f"min {min(walls):.3f} max {max(walls):.3f} n={args.runs}\n"
+            f"  jobs={n_jobs} stages={len(stages)} "
+            f"tasks={sum(s['numCompleteTasks'] for s in stages)}",
+            flush=True,
+        )
+        stages.sort(key=lambda s: -s.get("executorRunTime", 0))
+        for s in stages[: args.top]:
+            print(
+                f"  stage {s['stageId']:>4} tasks={s['numCompleteTasks']:>3} "
+                f"runTime={s['executorRunTime'] / 1000:6.2f}s "
+                f"in={s.get('inputBytes', 0) >> 10}KB "
+                f"sr={s.get('shuffleReadBytes', 0) >> 10}KB "
+                f"sw={s.get('shuffleWriteBytes', 0) >> 10}KB"
+            )
     spark.stop()
     return 0
 

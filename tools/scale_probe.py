@@ -26,7 +26,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 WORK = "/tmp/scale_probe"
@@ -247,398 +247,16 @@ def _lang_id_nb_op(docs):
     return lang_id_nb(docs, w, buckets=1024).count()
 
 
-def ledger_growth(spark, runs: int, factors=(1, 10, 100)) -> None:
-    """VERDICT r8 #6: the r8 probe grew the CORPUS at a fixed
-    ledger/shard ratio; the operational risk at a continuous crawl is
-    the LEDGER growing while the shard stays fixed. Here the shard is
-    pinned (a 10% slice of the 1x docs) and only the ledger scales:
-    each ledger is materialized UNTIMED — both as plain parquet and as
-    a band_hash-bucketed+sorted table (the 100 TB layout the
-    minhash_band_ledger docstring claims) — then the probe join is
-    timed against each. Shard-dominated = the bucketed slope stays far
-    below the ledger's growth factor."""
-    from pyspark.sql import functions as F
-
-    from methyl_data_pipeline_spark.ext.dedup import (
-        incremental_neardup,
-        minhash_band_ledger,
-    )
-
-    shard = spark.read.parquet(f"{SF_DIR}/documents.parquet").filter(
-        F.col("doc_id") % 10 == 3
-    )
-    shard_n = shard.count()
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    print(f"shard fixed at {shard_n} docs; ledger grows")
-    print("factor\tledger_rows\tt_parquet(s)\tt_bucketed(s)")
-    base = None
-    for f in factors:
-        docs_path, _ = replicate(spark, f) if f > 1 else (
-            f"{SF_DIR}/documents.parquet", None,
-        )
-        lpath = f"{WORK}/ledger_x{f}"
-        tbl = f"ledger_x{f}"
-        rebuilt = not os.path.exists(f"{lpath}/_SUCCESS")
-        if rebuilt:
-            led = minhash_band_ledger(spark.read.parquet(docs_path))
-            led.write.mode("overwrite").parquet(lpath)
-            # a stale bucketed table from a previous probe would make
-            # t_parquet and t_bucketed measure DIFFERENT ledgers after
-            # --fresh; rebuild it whenever the parquet was rebuilt
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        ledger_pq = spark.read.parquet(lpath)
-        n_rows = ledger_pq.count()
-        if not spark.catalog.tableExists(tbl):
-            # the 100 TB layout: pre-shuffled on the join key, so the
-            # probe pays NO ledger-side exchange (bucketed SMJ)
-            spark.read.parquet(lpath).write.bucketBy(
-                32, "band_hash"
-            ).sortBy("band_hash").mode("overwrite").saveAsTable(tbl)
-        ledger_bk = spark.table(tbl)
-        t_pq = timed(lambda: incremental_neardup(shard, ledger_pq).count())
-        t_bk = timed(lambda: incremental_neardup(shard, ledger_bk).count())
-        if base is None:
-            base = (t_pq, t_bk)
-        print(
-            f"{f}x\t{n_rows}\t{t_pq:.2f} ({t_pq / base[0]:.1f}x)"
-            f"\t{t_bk:.2f} ({t_bk / base[1]:.1f}x)"
-        )
-
-
-def semantic_growth(spark, runs: int, factors=(1, 10, 100)) -> None:
-    """VERDICT r9 #3 probe: semantic_dedup with corpus and cell count
-    growing TOGETHER (constant expected cell size — the SemDeDup
-    deployment shape, where k tracks n). Each replica is decorrelated
-    from its source by a deterministic per-(replica, dim) sine shift
-    (cosine to the source drops far below threshold) and re-seeded
-    with its own planted +0.1-perturbation copies, so the DUP RATE is
-    constant while the corpus grows — sum(cell^2) work should then
-    scale ~linearly with n. k > 256 flips the assignment to the
-    broadcast-join path automatically."""
-    from pyspark.sql import functions as F
-
-    from methyl_data_pipeline_spark.ext.similarity import (
-        md5_centroids,
-        semantic_dedup,
-        valid_vector,
-    )
-
-    def emb_path(f: int) -> str:
-        p = f"{WORK}/embeddings_x{f}"
-        if os.path.exists(p) and not os.path.exists(f"{p}/_SUCCESS"):
-            shutil.rmtree(p)
-        if not os.path.exists(p):
-            emb = (
-                spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-                .filter(valid_vector(F.col("embedding")))
-                .select(
-                    "vec_id",
-                    F.col("embedding").cast("array<double>").alias("embedding"),
-                )
-            )
-            rep = emb.withColumn(
-                "_r", F.explode(F.sequence(F.lit(0), F.lit(f - 1)))
-            ).withColumn("_r", F.col("_r").cast("long"))
-            # the shift must be pseudo-random per (ROW, DIM): a
-            # replica-wide shift turns each replica into one giant
-            # near-clique (~n^2/2 edges), and a same-frequency sine in
-            # the dim index puts every shifted vector on a 2-D
-            # quadrature ring that concentrates the whole corpus into
-            # a handful of Voronoi cells (both measured as heap
-            # deaths). xxhash64(row, dim) is JVM-side, deterministic,
-            # and structure-free.
-            row_id = F.col("vec_id") + F.col("_r") * 10_000_000
-            shifted = F.transform(
-                F.col("embedding"),
-                lambda x, i: x
-                + 0.5
-                * (
-                    (F.pmod(F.xxhash64(row_id, i), F.lit(2001)) - 1000)
-                    / 1000.0
-                ).cast("double"),
-            )
-            base = rep.select(
-                (F.col("vec_id") + F.col("_r") * 10_000_000).alias("vec_id"),
-                F.when(F.col("_r") == 0, F.col("embedding"))
-                .otherwise(shifted)
-                .alias("embedding"),
-            )
-            copies = base.filter(F.col("vec_id") % 10_000_000 < 50).select(
-                (F.col("vec_id") + 1_000_000).alias("vec_id"),
-                F.concat(
-                    F.array(F.get(F.col("embedding"), 0) + F.lit(0.1)),
-                    F.expr("slice(embedding, 2, greatest(size(embedding) - 1, 0))"),
-                ).alias("embedding"),
-            )
-            base.unionByName(copies).write.mode("overwrite").parquet(p)
-        return p
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    print("factor\trows\tcells\tassignment\tdups\tt(s)")
-    base_t = None
-    for f in factors:
-        emb = spark.read.parquet(emb_path(f))
-        n = emb.count()
-        k = 32 * f
-        cents = md5_centroids(k, 64)
-        # flat assignment is O(n*k*d) — fine to k ~ 10^3; beyond that
-        # the two-level refinement is the deployment shape (the flat
-        # k=3200 run measured ~45 min of fold evaluation)
-        mode = (
-            "transform" if k <= 256 else "join" if k <= 1024 else "two_level"
-        )
-        out = semantic_dedup(
-            emb, centroids=cents, threshold=0.95, assignment=mode
-        )
-        dups = out.filter("is_duplicate").count()
-        t = timed(lambda: semantic_dedup(
-            emb, centroids=cents, threshold=0.95, assignment=mode
-        ).count())
-        base_t = base_t if base_t is not None else t
-        print(
-            f"{f}x\t{n}\t{k}\t{mode}\t{dups}\t{t:.2f} ({t / base_t:.1f}x)"
-        )
-
-
-def containment_dup(spark, runs: int, factor: int = 10, rates=(1, 4)) -> None:
-    """VERDICT r9 #7: the r9 containment probe (replica model) held the
-    candidate rate constant; the adversarial case for the postings
-    prune is the duplicate rate itself growing — shared-boilerplate
-    grams filling their df buckets. At a FIXED 10x corpus, each
-    selected source doc emits ``rate`` identical 10-word prefix
-    snippets: every snippet gram then has df = rate+1, so candidate
-    work per gram is df_max-capped at min(rate+1, df_max)^2/2 and the
-    OUTPUT itself is ~sources x rate^2 mutual containments. A healthy
-    prune shows runtime tracking the output/df^2 prediction, not
-    corpus^2."""
-    from pyspark.sql import functions as F
-
-    from methyl_data_pipeline_spark.ext.dedup import containment_pairs
-
-    docs_path, _ = replicate(spark, factor)
-    docs = spark.read.parquet(docs_path)
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    ws = F.split(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "), " ")
-    print("rate\tsnippets\tpairs\tt(s)")
-    base = None
-    for rate in rates:
-        src = docs.filter(
-            F.col("text").isNotNull() & (F.col("doc_id") % 10_000_000 < 30)
-        )
-        snips = src.withColumn(
-            "_c", F.explode(F.sequence(F.lit(1), F.lit(rate)))
-        ).select(
-            (F.col("doc_id") + F.col("_c").cast("long") * 1_000_000_000).alias(
-                "doc_id"
-            ),
-            F.concat_ws(" ", F.slice(ws, 1, 10)).alias("text"),
-            "lang",
-            "source",
-        )
-        corpus = docs.unionByName(snips)
-        n_snip = snips.count()
-        n_pairs = containment_pairs(corpus).count()
-        t = timed(lambda: containment_pairs(corpus).count())
-        base = base if base is not None else (t, max(n_pairs, 1))
-        print(
-            f"{rate}x\t{n_snip}\t{n_pairs} ({n_pairs / base[1]:.1f}x)"
-            f"\t{t:.2f} ({t / base[0]:.2f}x)"
-        )
-
-
-def bpe_growth(spark, runs: int, factors=(1, 10, 100), k: int = 8) -> None:
-    """r11 probe for ``bpe_merges``: the corpus cost is the one-shot
-    word-frequency collapse; every merge round is vocab-sized. The
-    replica model is the WORST case for vocab growth — scrambled
-    replicas mint a fresh 8-hex token per word occurrence slot, so the
-    vocab grows ~linearly with the factor (real corpora follow Heaps'
-    law and grow far slower). A healthy shape shows runtime tracking
-    vocab size (the round tables), not corpus tokens."""
-    from pyspark.sql import functions as F
-
-    from methyl_data_pipeline_spark.ext.text import bpe_merges, words
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    print(f"factor\tvocab\ttokens\tt(s) (k={k})")
-    base = None
-    for f in factors:
-        docs_path, _ = replicate(spark, f)
-        docs = spark.read.parquet(docs_path)
-        w = docs.filter(F.col("text").isNotNull()).select(
-            F.explode(F.filter(words(F.col("text")), lambda x: x != "")).alias("w")
-        )
-        n_tok = w.count()
-        n_vocab = w.distinct().count()
-        t = timed(lambda: bpe_merges(docs, k=k).count())
-        base = base or t
-        print(f"{f}x\t{n_vocab}\t{n_tok}\t{t:.2f} ({t / base:.1f}x)")
-
-
-def minhash_family(spark, runs: int, factors=(1, 10)) -> None:
-    """VERDICT r11 #2: decide the MinHash hash-family default on
-    measured end-to-end wall, not hash-stage cost. For each family,
-    time (a) `minhash_candidate_pairs` alone (band + pair expansion)
-    and (b) the full `ngram_jaccard_pairs` two-stage (candidates +
-    exact-Jaccard verify), and count the candidate set each family
-    feeds the verify stage. The salted family costs ~1.75x in hashing
-    but emits fewer false candidates; the flip point is where the
-    verify saving exceeds the hash premium."""
-    from pyspark.sql import functions as F
-
-    from methyl_data_pipeline_spark.ext.dedup import (
-        minhash_candidate_pairs,
-        ngram_jaccard_pairs,
-    )
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    print("factor\tmix\tcands\tverified\tt_cand(s)\tt_e2e(s)")
-    for f in factors:
-        docs_path, _ = replicate(spark, f) if f > 1 else (
-            f"{SF_DIR}/documents.parquet",
-            None,
-        )
-        docs = spark.read.parquet(docs_path)
-        for mix in ("linear", "salted"):
-            n_c = minhash_candidate_pairs(
-                docs, num_hashes=8, bands=4, mix=mix
-            ).count()
-            n_v = ngram_jaccard_pairs(
-                docs, num_hashes=8, bands=4, mix=mix
-            ).count()
-            t_c = timed(
-                lambda: minhash_candidate_pairs(
-                    docs, num_hashes=8, bands=4, mix=mix
-                ).count()
-            )
-            t_e = timed(
-                lambda: ngram_jaccard_pairs(
-                    docs, num_hashes=8, bands=4, mix=mix
-                ).count()
-            )
-            print(f"{f}x\t{mix}\t{n_c}\t{n_v}\t{t_c:.2f}\t{t_e:.2f}")
-
-
-def normalize_cost(spark, runs: int, factors=(1, 10)) -> None:
-    """r12: cost of the unicode-normalized line_dedup key path
-    (normalize=True routes every line through the confusable translate
-    + the Arrow-batched NFC UDF) vs the default pure-JVM keying —
-    the price of the NBSP/NFC dedup coverage, measured end-to-end."""
-
-    from methyl_data_pipeline_spark.ext.dedup import line_dedup
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    print("factor\tnormalize\tt(s)")
-    for f in factors:
-        docs_path, _ = replicate(spark, f) if f > 1 else (
-            f"{SF_DIR}/documents.parquet",
-            None,
-        )
-        docs = spark.read.parquet(docs_path)
-        for norm in (False, True):
-            t = timed(lambda: line_dedup(docs, normalize=norm).count())
-            print(f"{f}x\t{norm}\t{t:.2f}")
-
-
-def lm_growth(spark, runs: int, factors=(1, 10)) -> None:
-    """r13 probe: ``bigram_logprob`` and ``train_quality_weights`` at
-    replica scale. The scrambled replicas are the WORST case for the
-    bigram model (near-every bigram is unique, so the model table
-    grows ~linearly with tokens — real corpora grow far slower); a
-    healthy shape shows wall tracking the model-fit shuffles, not
-    corpus^2. The NB trainer is a single bucket-keyed aggregate, so
-    its wall should track the token count ~linearly."""
-    from pyspark.sql import functions as F
-
-    from methyl_data_pipeline_spark.ext.text import (
-        bigram_logprob,
-        train_quality_weights,
-    )
-
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
-    print("factor\tdocs\tbigram t(s)\ttrain t(s)")
-    base_lm = base_tr = None
-    for f in factors:
-        docs_path, _ = replicate(spark, f)
-        docs = spark.read.parquet(docs_path)
-        n = docs.count()
-        labeled = docs.withColumn(
-            "_gold", (F.col("doc_id") % 2 == 0).cast("int")
-        )
-        t_lm = timed(lambda: bigram_logprob(docs).count())
-        t_tr = timed(
-            lambda: train_quality_weights(labeled, "_gold").count()
-        )
-        base_lm = base_lm or t_lm
-        base_tr = base_tr or t_tr
-        print(
-            f"{f}x\t{n}\t{t_lm:.2f} ({t_lm / base_lm:.1f}x)"
-            f"\t{t_tr:.2f} ({t_tr / base_tr:.1f}x)"
-        )
+def timed(fn, runs: int) -> float:
+    """Median wall of ``runs`` calls of ``fn`` after one warm-up call."""
+    fn()
+    ts = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        fn()
+        ts.append(time.perf_counter() - t0)
+    ts.sort()
+    return ts[len(ts) // 2]
 
 
 def main() -> None:
@@ -646,39 +264,6 @@ def main() -> None:
     ap.add_argument("--factor", type=int, default=100)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument("--fresh", action="store_true", help="rebuild replicas")
-    ap.add_argument(
-        "--ledger-growth", action="store_true",
-        help="fixed shard vs 1x/10x/100x ledger (VERDICT r8 #6)",
-    )
-    ap.add_argument(
-        "--semantic-growth", action="store_true",
-        help="semantic_dedup with corpus AND cells at 1x/10x/100x "
-        "(VERDICT r9 #3)",
-    )
-    ap.add_argument(
-        "--containment-dup", action="store_true",
-        help="containment_pairs at 10x corpus with dup rate 1x vs 4x "
-        "(VERDICT r9 #7)",
-    )
-    ap.add_argument(
-        "--bpe-growth", action="store_true",
-        help="bpe_merges at 1x/10x/100x corpus (worst-case linear "
-        "vocab growth; r11)",
-    )
-    ap.add_argument(
-        "--minhash-family", action="store_true",
-        help="linear vs salted end-to-end candidate+verify wall at "
-        "1x/10x (VERDICT r11 #2)",
-    )
-    ap.add_argument(
-        "--normalize-cost", action="store_true",
-        help="line_dedup unicode-normalized keying vs default at "
-        "1x/10x (r12)",
-    )
-    ap.add_argument(
-        "--lm-growth", action="store_true",
-        help="bigram_logprob + train_quality_weights at 1x/10x (r13)",
-    )
     ap.add_argument("ops", nargs="*")
     args = ap.parse_args()
     if args.fresh and os.path.exists(WORK):
@@ -698,57 +283,19 @@ def main() -> None:
         shuffle_partitions=int(cpus),
         extra_conf={"spark.driver.memory": "16g"},
     )
-    if args.ledger_growth:
-        ledger_growth(spark, args.runs)
-        spark.stop()
-        return
-    if args.semantic_growth:
-        semantic_growth(spark, args.runs)
-        spark.stop()
-        return
-    if args.containment_dup:
-        containment_dup(spark, args.runs)
-        spark.stop()
-        return
-    if args.bpe_growth:
-        bpe_growth(spark, args.runs)
-        spark.stop()
-        return
-    if args.minhash_family:
-        minhash_family(spark, args.runs)
-        spark.stop()
-        return
-    if args.normalize_cost:
-        normalize_cost(spark, args.runs)
-        spark.stop()
-        return
-    if args.lm_growth:
-        lm_growth(spark, args.runs)
-        spark.stop()
-        return
     docs100, ev100 = replicate(spark, args.factor)
     base = {
         "docs": f"{SF_DIR}/documents.parquet",
         "ev": f"{SF_DIR}/events.parquet",
     }
 
-    def timed(fn):
-        ts = []
-        fn()  # warm
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            fn()
-            ts.append(time.perf_counter() - t0)
-        ts.sort()
-        return ts[len(ts) // 2]
-
     names = args.ops or ["simhash_pairs", "budget_select", "funnel", "cohort_retention"]
     ops1 = build_ops(spark, base["docs"], base["ev"], 1)
     opsN = build_ops(spark, docs100, ev100, args.factor)
     print(f"op\tt_1x(s)\tt_{args.factor}x(s)\tslope")
     for name in names:
-        t1 = timed(ops1[name])
-        tn = timed(opsN[name])
+        t1 = timed(ops1[name], args.runs)
+        tn = timed(opsN[name], args.runs)
         print(f"{name}\t{t1:.2f}\t{tn:.2f}\t{tn / t1:.2f}x")
     spark.stop()
 
